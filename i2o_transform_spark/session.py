@@ -30,6 +30,17 @@ def _mem_total_gib() -> float:
     return 0.0
 
 
+def _driver_mem() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else 30% of host RAM in whole
+    GiB, between 1g and 16g.  In local mode this one JVM also hosts every
+    executor, and a fixed 16g on a host with less RAM and no swap gets the
+    JVM OOM-killed instead of collected."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    return f"{min(16, max(1, int(0.3 * _mem_total_gib())))}g"
+
+
 def _sandbox_profile() -> bool:
     """Whether to apply the aggressive single-JVM benchmark profile
     (pre-touched fixed heap, tmpfs shuffle dirs).
@@ -41,7 +52,7 @@ def _sandbox_profile() -> bool:
     env = os.environ.get("SPARK_GRAFT_SANDBOX")
     if env is not None:
         return env not in ("0", "false", "")
-    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    heap = _driver_mem()
     try:
         heap_gib = float(heap.lower().rstrip("gm")) * (
             1.0 if heap.lower().endswith("g") else 1.0 / 1024
@@ -63,7 +74,7 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": _driver_mem(),
     # Two JVM pathologies break local[N] scaling on this sandbox and both are
     # GC-side, not Spark-side:
     # * G1's GCLocker stalls under many concurrently-allocating task threads
@@ -86,9 +97,7 @@ if _sandbox_profile():
     # cores.  On a real cluster the heap stays lazy and spark.local.dir is the
     # executors' NVMe local dirs via spark-submit.
     _BASE_CONF["spark.driver.extraJavaOptions"] = (
-        "-XX:+UseParallelGC -Xms"
-        + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        + " -XX:+AlwaysPreTouch"
+        "-XX:+UseParallelGC -Xms" + _driver_mem() + " -XX:+AlwaysPreTouch"
     )
     if os.path.isdir("/dev/shm"):
         _BASE_CONF["spark.local.dir"] = "/dev/shm/spark-local"

@@ -14,7 +14,7 @@ SF_SMALL = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", master="local[8]")
+    s = get_spark("pytest")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -1,20 +1,54 @@
 """End-to-end KG pipeline tests: the P/R >= 0.95 gate, the byte-identical
 extraction invariant, checkpoint/resume, lineage/metrics, and broadcast-vs-
-salted join path equivalence (BASELINE.md §2)."""
+salted join path equivalence (BASELINE.md §2), and the runner's concurrent
+stage scheduling."""
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
+import sys
+import threading
+import time
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from i2o_transform_spark.datagen import generate
 from i2o_transform_spark.plans import kg
-from i2o_transform_spark.plans.runner import run_pipeline
+from i2o_transform_spark.plans.runner import Runner, run_pipeline
 
 N_PAGES = 400
+
+
+@contextlib.contextmanager
+def _stage_spans():
+    """Wrap ``Runner.stage`` and record, per stage, its upstream list and
+    its (start, end) times."""
+    spans: dict[str, tuple[list[str], float, float]] = {}
+    orig = Runner.stage
+
+    def stage(runner, name, fn, upstream=(), **kw):
+        t0 = time.perf_counter()
+        try:
+            return orig(runner, name, fn, upstream, **kw)
+        finally:
+            spans[name] = (list(upstream), t0, time.perf_counter())
+
+    Runner.stage = stage
+    try:
+        yield spans
+    finally:
+        Runner.stage = orig
+
+
+def _assert_upstream_ended_first(spans):
+    for name, (upstream, start, _) in spans.items():
+        for u in upstream:
+            assert spans[u][2] <= start, f"{name} started before {u} ended"
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +59,10 @@ def data(spark):
 @pytest.fixture(scope="module")
 def pipeline_out(spark, data, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kg_run"))
-    return run_pipeline(spark, out, n_pages=N_PAGES), out
+    with _stage_spans() as spans:
+        outs = run_pipeline(spark, out, n_pages=N_PAGES)
+    outs["_spans"] = spans
+    return outs, out
 
 
 def _emitted(outs):
@@ -145,6 +182,78 @@ def test_manifest_written(spark, pipeline_out):
         manifest = json.load(f)
     assert manifest["triples"]["rows"] > 0
     assert all("fingerprint" in v for v in manifest.values())
+
+
+def test_stages_scheduled_concurrently_in_dependency_order(pipeline_out):
+    """Every stage starts after all of its upstream stages have ended, and
+    independent branches overlap: ``extracted`` (reads only ``pages``)
+    starts before ``canon_map`` (behind ``crosswalk``) has ended."""
+    outs, _ = pipeline_out
+    spans = outs["_spans"]
+    assert set(spans) == set(outs["_runner"].executed)
+    _assert_upstream_ended_first(spans)
+    assert spans["extracted"][1] < spans["canon_map"][2]
+
+
+def test_rerun_executes_nothing(spark, pipeline_out):
+    """A second run over the same directory resumes every stage, and the
+    manifest that concurrent stages rewrote still parses."""
+    _, out_dir = pipeline_out
+    r = run_pipeline(spark, out_dir, n_pages=N_PAGES)["_runner"]
+    assert r.executed == [] and "triples" in r.skipped
+    with open(os.path.join(out_dir, "_manifest.json")) as f:
+        manifest = json.load(f)
+    assert set(manifest) == set(r.skipped)
+    assert not os.path.exists(os.path.join(out_dir, "_manifest.json.tmp"))
+
+
+def test_concurrent_stages_lose_no_update(spark, tmp_path):
+    """Twelve independent stages commit at once, with frequent thread
+    switches, into the shared manifest, lineage and metrics; a fan-in
+    stage then receives every one of their outputs."""
+    names = [f"s{i}" for i in range(12)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with Runner(spark, str(tmp_path)) as r:
+            for i, name in enumerate(names):
+                r.submit(name, lambda i=i: spark.range(i, i + 1))
+            r.submit(
+                "all", lambda *dfs: functools.reduce(DataFrame.union, dfs),
+                upstream=names,
+            )
+            r.join()
+            r.finish()
+    finally:
+        sys.setswitchinterval(switch)
+    assert sorted(r.executed) == sorted(names + ["all"])
+    assert sorted(x.id for x in r.outputs["all"].collect()) == list(range(12))
+    with open(os.path.join(str(tmp_path), "_manifest.json")) as f:
+        assert set(json.load(f)) == set(r.executed)
+    metrics = spark.read.parquet(os.path.join(str(tmp_path), "_metrics"))
+    assert sorted(x.stage for x in metrics.collect()) == sorted(r.executed)
+    lineage = spark.read.parquet(os.path.join(str(tmp_path), "_lineage"))
+    assert lineage.agg(F.sum("rows")).first()[0] == 24
+
+
+def test_failed_stage_fails_its_dependents(spark, tmp_path):
+    """A stage that raises marks every stage behind it failed without
+    running it; ``join`` re-raises the failure once every thread ended."""
+
+    def boom():
+        raise ValueError("boom")
+
+    with Runner(spark, str(tmp_path)) as r:
+        r.submit("a", boom)
+        r.submit("b", lambda a: a, upstream=["a"])
+        with pytest.raises(ValueError, match="boom"):
+            r.join()
+        with pytest.raises(ValueError, match="boom"):
+            r.wait("b")
+        with pytest.raises(ValueError, match="undeclared upstream"):
+            r.submit("c", lambda x: x, upstream=["x"])
+    assert r.outputs == {} and r.executed == []
+    assert not any(t.name.startswith("stage:") for t in threading.enumerate())
 
 
 def test_salted_path_equals_broadcast_path(spark, data):
@@ -560,6 +669,26 @@ def test_runner_disambiguate_end_to_end(spark, tmp_path):
     n_got, n_gold = got.count(), gold.count()
     assert inter / n_got >= 0.99 and inter / n_gold >= 0.99
     assert "entity_embeddings" in outs
+
+
+def test_runner_modular_disambiguate_end_to_end(spark, tmp_path):
+    """The stage DAG with fused=False, disambiguate=True: the context
+    embedding is its own ``sentence_ctx`` stage, declared upstream of
+    ``triples``, and the triples pass the same P/R check as the fused
+    path."""
+    n = 200
+    with _stage_spans() as spans:
+        outs = run_pipeline(spark, str(tmp_path / "amb_mod"), n_pages=n,
+                            disambiguate=True, fused=False)
+    _assert_upstream_ended_first(spans)
+    assert "sentence_ctx" in spans["triples"][0]
+    got = _emitted(outs)
+    gold = generate(spark, n, with_ambiguity=True)["golden_triples"].select(
+        "subj_id", "pred_id", "obj_id"
+    ).distinct()
+    inter = got.join(gold, ["subj_id", "pred_id", "obj_id"]).count()
+    n_got, n_gold = got.count(), gold.count()
+    assert inter / n_got >= 0.99 and inter / n_gold >= 0.99
 
 
 def test_web_extras_stages(spark, tmp_path):
