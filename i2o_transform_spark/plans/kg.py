@@ -13,8 +13,8 @@ Recasts the reference's ontology-mapping ETL as web-scale KG construction:
   canonicalize        dedup/merge procedures -> connected          blocked CC
                       components over sameAs evidence              applyInPandas
   detect_mentions     fact->ontology dictionary join J1            token spans
-                      (MSSQL/OMOPLoader.sql:1046)                  + broadcast
-                                                                   (or salted)
+                      (MSSQL/OMOPLoader.sql:1046)                  + salted
+                                                                   join
   extract_qualifiers  config-driven modifier extraction U4         regex spans
                       (MSSQL/OMOPLoader.sql:1690-1759)             + join
   assemble_triples    modifier reassembly J3 + domain routing F6   groupBy +
@@ -25,10 +25,12 @@ Recasts the reference's ontology-mapping ETL as web-scale KG construction:
 Scale notes (100 TB / 10^12 pages):
 * the pages scan never shuffles until mention assembly, which groups by
   (url, sent_idx) — keys are uniformly distributed, no skew;
-* the vocabulary is broadcast (zero-shuffle dictionary join); if it outgrows
-  the broadcast threshold, ``broadcast_vocab=False`` switches to a salted
-  repartition join (hot surface forms are the skew: HOT_SUBJ_PCT of mentions
-  share one surface);
+* the vocabulary size picks the assembly path: up to MAX_BROADCAST_VOCAB
+  surfaces it is broadcast into the one-Arrow-stage ``extract_and_assemble``
+  kernel (zero-shuffle dictionary probe); past it the modular path
+  (detect_mentions -> extract_qualifiers -> assemble_triples) joins spans to
+  the vocabulary with a salted repartition join (hot surface forms are the
+  skew: HOT_SUBJ_PCT of mentions share one surface);
 * canonicalization is bounded per block (first-token blocking) — no global
   iteration;
 * every stage is a pure DataFrame -> DataFrame function; the runner persists
@@ -69,10 +71,10 @@ MAX_SURFACE_TOKENS = 3
 # on ASCII fixtures (ADVICE r01).
 SENT_SPLIT_PATTERN = r"\.\s*"
 _SENT_SPLIT_RE = re.compile(SENT_SPLIT_PATTERN, re.ASCII)
-# Soft cap on inlined/broadcast vocabulary size: past this the literal
-# IN-set / driver-snapshot paths stop being "broadcast-sized by definition"
-# and callers must take the salted modular path (detect_mentions with
-# broadcast_vocab=False).  assemble-time check, not advisory (VERDICT r01).
+# Cap on the broadcast vocabulary of the fused kernel: past this the driver
+# snapshot stops being "broadcast-sized by definition" and callers must take
+# the salted modular path (detect_mentions -> assemble_triples).
+# assemble-time check, not advisory (VERDICT r01).
 MAX_BROADCAST_VOCAB = 250_000
 # Default width of the hashing-trick context embedding emitted by the
 # assembly stages (ctx_dim=) for embedding entity-link scoring.  64 keeps
@@ -116,8 +118,8 @@ def _check_no_dual_domain(surf_rows) -> None:
     and an entity domain.  The mention-election semantics (longest-match then
     entity/predicate routing) are only deterministic when the partition is
     exclusive — the modular path's max_by tie-break would otherwise pick an
-    arbitrary kind.  Asserted at plan build time for every assembly path
-    (ADVICE r01)."""
+    arbitrary kind.  Asserted at plan build time by the fused assembly
+    kernel (ADVICE r01)."""
     doms: dict[str, set] = {}
     for r in surf_rows:
         doms.setdefault(r.surface_form, set()).add(
@@ -353,40 +355,29 @@ def split_sentences(docs: DataFrame) -> DataFrame:
 def detect_mentions(
     sentences: DataFrame,
     crosswalk: DataFrame,
-    broadcast_vocab: bool | str = True,
     salt_buckets: int | None = 16,
 ) -> DataFrame:
     """Dictionary mention detection: token spans x surface vocabulary.
 
-    J1 (MSSQL/OMOPLoader.sql:1046).  Plan shape — ZERO pre-join shuffles:
+    J1 (MSSQL/OMOPLoader.sql:1046), the big-vocabulary path: a vocabulary
+    within MAX_BROADCAST_VOCAB goes through the fused
+    :func:`extract_and_assemble` kernel instead.  Plan shape:
 
     * posexplode tokens, grams built with element_at on the carried token
       array (no lead() window, no sort);
-    * span candidates pre-filtered with per-length literal IN-sets collected
-      from the (broadcast-sized) vocabulary BEFORE the explode — the 3x
-      candidate fan-out only materializes actual dictionary hits (~10x
-      fewer rows than raw spans);
-    * kind attached via broadcast join;
+    * every 1/2/3-token span joins the vocabulary with a salted repartition
+      join (the vocabulary is too big to broadcast, and hot surface forms
+      are skewed — north_star salted-key hash join);
     * longest-match-wins per (url, sent_idx, start) as groupBy + max_by —
       a hash aggregation with map-side partial combine, not a window sort.
 
-    ``broadcast_vocab=False`` is the big-vocabulary path: no literal
-    pre-filter (vocab too big to inline), salted repartition join instead
-    (hot surface forms are skewed — north_star salted-key hash join).
     Output: (url, warc_ts, sent_idx, start, len, surface, kind).
 
-    Auto-planning (VERDICT r02 #7): ``broadcast_vocab="auto"`` counts the
-    vocabulary and picks the path against MAX_BROADCAST_VOCAB itself;
-    ``salt_buckets=None`` on the salted path derives the bucket count from
-    the observed hot-key share (operators.joins.plan_salt_buckets) instead
-    of a caller guess — a planted 30%-hot-surface corpus gets
+    Auto-planning (VERDICT r02 #7): ``salt_buckets=None`` derives the bucket
+    count from the observed hot-key share (operators.joins.plan_salt_buckets)
+    instead of a caller guess — a planted 30%-hot-surface corpus gets
     ceil(0.3 x parallelism) buckets, a uniform corpus gets an unsalted join.
     """
-    if broadcast_vocab == "auto":
-        broadcast_vocab = (
-            crosswalk.select("surface_form").distinct().count()
-            <= MAX_BROADCAST_VOCAB
-        )
     toks = sentences.select(
         "url",
         "warc_ts",
@@ -410,54 +401,24 @@ def detect_mentions(
     def _span(n, g):
         return F.struct(F.lit(n).alias("len"), g.alias("gram"))
 
-    if broadcast_vocab:
-        # vocab is broadcast-sized by definition: inline per-length literal
-        # IN-sets so the fan-out explode emits only dictionary hits
-        by_len: dict[int, list[str]] = {1: [], 2: [], 3: []}
-        for r in surfaces.select("gram").collect():
-            n = len(r.gram.split(" "))
-            if n in by_len:
-                by_len[n].append(r.gram)
+    spans = toks.select(
+        "url",
+        "warc_ts",
+        "sent_idx",
+        F.col("pos").alias("start"),
+        F.explode(F.array(_span(1, g1), _span(2, g2), _span(3, g3))).alias("sp"),
+    ).select("url", "warc_ts", "sent_idx", "start", "sp.len", "sp.gram").where(
+        F.col("gram").isNotNull()
+    )
+    if salt_buckets is None:
+        from i2o_transform_spark.operators.joins import plan_salt_buckets
 
-        def _guard(n, g):
-            if not by_len[n]:
-                return F.lit(None).cast(
-                    "struct<len:int,gram:string>"
-                )
-            return F.when(g.isin(*by_len[n]), _span(n, g))
-
-        cands = toks.select(
-            "url",
-            "warc_ts",
-            "sent_idx",
-            F.col("pos").alias("start"),
-            F.explode(
-                F.filter(
-                    F.array(_guard(1, g1), _guard(2, g2), _guard(3, g3)),
-                    lambda s: s.isNotNull(),
-                )
-            ).alias("sp"),
-        ).select("url", "warc_ts", "sent_idx", "start", "sp.len", "sp.gram")
-        hits = cands.join(F.broadcast(surfaces), "gram")
-    else:
-        spans = toks.select(
-            "url",
-            "warc_ts",
-            "sent_idx",
-            F.col("pos").alias("start"),
-            F.explode(F.array(_span(1, g1), _span(2, g2), _span(3, g3))).alias("sp"),
-        ).select("url", "warc_ts", "sent_idx", "start", "sp.len", "sp.gram").where(
-            F.col("gram").isNotNull()
-        )
-        if salt_buckets is None:
-            from i2o_transform_spark.operators.joins import plan_salt_buckets
-
-            # bounded planning pass over the RAW span stream — the join
-            # shuffles every span row (hit or not) on gram, so raw-stream
-            # skew is what sizes the buckets; groupBy.count combines
-            # map-side (shuffle = one row per distinct gram, skew-free)
-            salt_buckets = plan_salt_buckets(spans, "gram")
-        hits = salted_join(spans, surfaces, "gram", salt_buckets=salt_buckets)
+        # bounded planning pass over the RAW span stream — the join
+        # shuffles every span row (hit or not) on gram, so raw-stream
+        # skew is what sizes the buckets; groupBy.count combines
+        # map-side (shuffle = one row per distinct gram, skew-free)
+        salt_buckets = plan_salt_buckets(spans, "gram")
+    hits = salted_join(spans, surfaces, "gram", salt_buckets=salt_buckets)
 
     # longest-match (W2) as a hash agg: unique len per (start) makes max_by
     # exact; partial aggregation combines map-side before the one shuffle
@@ -470,150 +431,6 @@ def detect_mentions(
             ).alias("m"),
         )
         .select("url", "warc_ts", "sent_idx", "start", "m.len", "m.surface", "m.kind")
-    )
-
-
-def assemble_sentences(
-    sentences: DataFrame,
-    crosswalk: DataFrame,
-    modifier_config: DataFrame,
-    ctx_dim: int | None = None,
-) -> DataFrame:
-    """Fused narrow-path assembly: mention detection + longest-match-wins +
-    subject/predicate/object election + qualifier extraction computed as pure
-    array expressions over each sentence — ZERO shuffles.
-
-    Semantics are identical to the modular path
-    (detect_mentions -> extract_qualifiers -> assemble_triples; property-
-    tested equal), but where that path pays three aggregation exchanges and
-    two joins, this one stays entirely inside whole-stage codegen: the only
-    shuffle in the whole pipeline is the final triple dedup in
-    ``link_and_emit``.  This is the plan shape that scales — per-sentence
-    logic is embarrassingly parallel, so throughput is linear in cores and
-    the 100 TB run's network cost is one exchange of (subj,pred,obj,url)
-    tuples, not four exchanges of token-level intermediates.
-
-    Requires a broadcast-sized vocabulary (literal IN-sets, like the
-    reference's in-memory ontology probe); the big-vocab fallback is the
-    modular path with ``broadcast_vocab=False`` (salted repartition join).
-    """
-    surf_rows = crosswalk.select("surface_form", "canon_domain").distinct().collect()
-    _check_no_dual_domain(surf_rows)  # exclusive routing precondition
-    if len(surf_rows) > MAX_BROADCAST_VOCAB:
-        raise ValueError(
-            f"vocabulary ({len(surf_rows)} surfaces) exceeds "
-            f"MAX_BROADCAST_VOCAB={MAX_BROADCAST_VOCAB}; use the salted "
-            "modular path (detect_mentions(broadcast_vocab=False))"
-        )
-    by_len: dict[int, list[str]] = {1: [], 2: [], 3: []}
-    pred_surfaces: list[str] = []
-    for r in surf_rows:
-        n = len(r.surface_form.split(" "))
-        if n in by_len:
-            by_len[n].append(r.surface_form)
-        if r.canon_domain == "Predicate":
-            pred_surfaces.append(r.surface_form)
-    cfg = [r.asDict() for r in modifier_config.collect()]
-
-    T = F.col("tokens")
-
-    def tok(i, off=0):
-        return F.try_element_at(T, i + 1 + off)
-
-    def gram(i, n):
-        if n == 1:
-            return tok(i)
-        parts = []
-        for j in range(n):
-            if j:
-                parts.append(F.lit(" "))
-            parts.append(tok(i, j))
-        return F.concat(*parts)  # NULL tail token nulls the whole gram
-
-    # multi-token grams are only worth building (string concat = the hot
-    # allocation) when the current token can start one — the first-word
-    # prefilter skips the concat for the vast majority of positions
-    multi_first_words = sorted(
-        {s.split(" ")[0] for n in (2, 3) for s in by_len[n]}
-    )
-
-    def longest(i):
-        m = F.lit(None).cast("struct<start:int,len:int,surface:string>")
-        for n in (1, 2, 3):  # build shortest->longest so longest wins
-            if by_len[n]:
-                g = gram(i, n)
-                hit = F.when(
-                    g.isin(*by_len[n]),
-                    F.struct(
-                        i.cast("int").alias("start"),
-                        F.lit(n).alias("len"),
-                        g.alias("surface"),
-                    ),
-                ).otherwise(m)
-                if n == 1:
-                    m = hit
-                else:
-                    m = F.when(tok(i).isin(*multi_first_words), hit).otherwise(m)
-        return m
-
-    mentions = F.filter(
-        F.transform(F.sequence(F.lit(0), F.size(T) - 1), longest),
-        lambda m: m.isNotNull(),
-    )
-    if pred_surfaces:
-        is_pred = lambda m: m["surface"].isin(*pred_surfaces)  # noqa: E731
-    else:
-        is_pred = lambda m: F.lit(False)  # noqa: E731
-    ents = F.filter(mentions, lambda m: ~is_pred(m))
-    preds = F.filter(mentions, lambda m: is_pred(m))
-
-    subj = F.try_element_at(ents, F.lit(1))
-    obj = F.try_element_at(ents, F.lit(-1))
-    pred = F.try_element_at(preds, F.lit(1))
-
-    qual_cols = []
-    for spec in cfg:
-        matched = F.filter(
-            F.transform(F.sequence(F.lit(0), F.size(T) - 1), lambda i: i),
-            lambda i: (i > 0)
-            & F.try_element_at(T, i + 1).rlike(spec["pattern"])
-            & (F.try_element_at(T, i) == F.lit(spec["trigger_token"])),
-        )
-        val = F.array_min(
-            F.transform(matched, lambda i: F.try_element_at(T, i + 1))
-        )
-        qual_cols.append(val.cast("int").alias(f"qualifier_{spec['kind']}"))
-
-    ctx_cols = []
-    if ctx_dim:
-        from i2o_transform_spark.operators.entity_link import hashing_trick_embed
-
-        ctx_cols = [hashing_trick_embed(T, ctx_dim).alias("ctx")]
-    out = sentences.select(
-        "url",
-        "warc_ts",
-        "sent_idx",
-        subj.alias("subj"),
-        pred.alias("pred"),
-        obj.alias("obj"),
-        *qual_cols,
-        *ctx_cols,
-    )
-    return out.where(
-        F.col("subj").isNotNull()
-        & F.col("pred").isNotNull()
-        & F.col("obj").isNotNull()
-        & (F.col("subj.start") + F.col("subj.len") <= F.col("pred.start"))
-        & (F.col("pred.start") < F.col("obj.start"))
-    ).select(
-        "url",
-        "warc_ts",
-        "sent_idx",
-        F.col("subj.surface").alias("subj_surface"),
-        F.col("pred.surface").alias("pred_surface"),
-        F.col("obj.surface").alias("obj_surface"),
-        *[F.col(f"qualifier_{s['kind']}") for s in cfg],
-        *(["ctx"] if ctx_dim else []),
     )
 
 
@@ -631,7 +448,8 @@ def _collect_assembly_vocab(crosswalk: DataFrame, modifier_config: DataFrame):
         raise ValueError(
             f"vocabulary ({len(surf_rows)} surfaces) exceeds "
             f"MAX_BROADCAST_VOCAB={MAX_BROADCAST_VOCAB}; use the salted "
-            "modular path (detect_mentions(broadcast_vocab=False))"
+            "modular path (detect_mentions -> extract_qualifiers -> "
+            "assemble_triples), which run_pipeline picks by itself"
         )
     by_len: dict[int, set] = {1: set(), 2: set(), 3: set()}
     pred_set: set = set()
@@ -826,46 +644,6 @@ def _make_assembler(
     return assemble
 
 
-def assemble_sentences_pandas(
-    sentences: DataFrame,
-    crosswalk: DataFrame,
-    modifier_config: DataFrame,
-    ctx_dim: int | None = None,
-) -> DataFrame:
-    """Arrow-vectorized twin of ``assemble_sentences``: the same per-sentence
-    mention/longest-match/election/qualifier logic inside one mapInPandas.
-
-    Why it exists: Spark's higher-order array functions (transform/filter)
-    are interpreted per element, not whole-stage-codegen — on token-level
-    string work they run ~5x slower than Arrow-vectorized pandas and scale
-    worse (allocation-bound).  Same zero-shuffle plan shape as the expression
-    version; property-tested equal output.
-    """
-    vocab = _collect_assembly_vocab(crosswalk, modifier_config)
-    out_schema = _assembled_schema(vocab[4], ctx_dim)
-    # ship the vocab once per executor as a Spark broadcast variable, not as
-    # task-closure capture: the closure is serialized into EVERY task, the
-    # broadcast once per executor and cached (VERDICT r01 What's-wrong #1)
-    bc = sentences.sparkSession.sparkContext.broadcast(vocab)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _make_assembler(*bc.value, ctx_dim=ctx_dim)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            res = kernel(
-                pdf["url"].to_numpy(),
-                pdf["warc_ts"].to_numpy(),
-                pdf["sent_idx"].to_numpy(),
-                pdf["tokens"].tolist(),
-            )
-            if res is not None:
-                yield res
-
-    cols = sentences.select("url", "warc_ts", "sent_idx", "tokens")
-    return cols.mapInPandas(run, out_schema)
-
-
 def extract_and_assemble(
     pages: DataFrame,
     crosswalk: DataFrame,
@@ -876,15 +654,16 @@ def extract_and_assemble(
     """The whole narrow path — html -> text -> sentences -> assembled triples
     surface rows — in ONE Arrow stage.
 
-    The staged path (extract_text -> split_sentences -> assembly) crosses the
-    JVM/Python Arrow boundary twice and materializes the token-level sentence
-    frame in between; that frame is several times larger than the input pages
-    and its serialization is data-proportional but does not parallelize
-    cleanly.  Fusing the three steps means Arrow moves (url, warc_ts, html)
-    in and the tiny assembled rows out, nothing else.  The language filter
-    stays Spark-side (parquet predicate pushdown).  Semantics are identical
-    to the staged path (property-tested); the byte-identical-text invariant
-    is still checked by the separate extract_text stage in the runner.
+    Extraction, sentence split and assembly share one kernel, so Arrow moves
+    (url, warc_ts, html) in and the tiny assembled rows out, nothing else:
+    the token-level sentence frame, several times larger than the input
+    pages, never crosses the JVM/Python boundary.  The language filter stays
+    Spark-side (parquet predicate pushdown).  The vocabulary is broadcast, so
+    it must stay within MAX_BROADCAST_VOCAB; past it the modular path
+    (split_sentences -> detect_mentions -> extract_qualifiers ->
+    assemble_triples, salted join) takes over.  Semantics are identical to
+    that path (property-tested); the byte-identical-text invariant is still
+    checked by the separate extract_text stage in the runner.
 
     With ``entity_candidates`` (surface_form, entity_id, emb; requires
     ``ctx_dim``) the embedding entity-link **election runs inside this same

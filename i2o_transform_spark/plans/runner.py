@@ -23,7 +23,7 @@ it stay per stage; threads inherit the declaring thread's local properties
 when they end.  Declared inputs: a stage function receives its upstream
 stages' committed DataFrames as positional arguments, in ``upstream``
 order, and reaches no other stage's output.  Path decisions that read data
-(``run_pipeline``'s broadcast-vocab check) wait only for the stage they
+(``run_pipeline``'s vocabulary-size check) wait only for the stage they
 read (``Runner.wait``).  ``stop_after=X`` runs every stage declared up to
 and including X, then ``finish``.
 
@@ -260,22 +260,25 @@ class Runner:
                 raise self._failed[name]
 
     def finish(self) -> None:
-        """Append this run's lineage and metrics rows.  Both frames go
-        through Arrow from pandas: no Python-worker job per write."""
-        lineage = pd.DataFrame(
-            self.lineage_rows or [(self.run_id, "_empty", -1, 0)],
-            columns=["run_id", "stage", "partition_id", "rows"],
-        )
-        self.spark.createDataFrame(lineage, _LINEAGE_SCHEMA).write.mode(
-            "append"
-        ).parquet(os.path.join(self.out_dir, "_lineage"))
-        metrics = pd.DataFrame(
-            self.metrics_rows or [(self.run_id, "_empty", 0, None, 0.0)],
-            columns=["run_id", "stage", "rows", "distinct_entities", "wall_s"],
-        ).astype({"distinct_entities": "Int64"})
-        self.spark.createDataFrame(metrics, _METRICS_SCHEMA).write.mode(
-            "append"
-        ).parquet(os.path.join(self.out_dir, "_metrics"))
+        """Append this run's lineage and metrics rows; a run where every
+        stage resumed appends nothing.  Both frames go through Arrow from
+        pandas: no Python-worker job per write."""
+        if self.lineage_rows:
+            lineage = pd.DataFrame(
+                self.lineage_rows,
+                columns=["run_id", "stage", "partition_id", "rows"],
+            )
+            self.spark.createDataFrame(lineage, _LINEAGE_SCHEMA).write.mode(
+                "append"
+            ).parquet(os.path.join(self.out_dir, "_lineage"))
+        if self.metrics_rows:
+            metrics = pd.DataFrame(
+                self.metrics_rows,
+                columns=["run_id", "stage", "rows", "distinct_entities", "wall_s"],
+            ).astype({"distinct_entities": "Int64"})
+            self.spark.createDataFrame(metrics, _METRICS_SCHEMA).write.mode(
+                "append"
+            ).parquet(os.path.join(self.out_dir, "_metrics"))
 
 
 def run_pipeline(
@@ -283,8 +286,6 @@ def run_pipeline(
     out_dir: str,
     n_pages: int = 2000,
     seed: int = 42,
-    broadcast_vocab: bool = True,
-    fused: bool = True,
     stop_after: str | None = None,
     disambiguate: bool = False,
     web_extras: bool = False,
@@ -294,6 +295,12 @@ def run_pipeline(
     run after every stage declared up to and including the named one has
     committed (kill-and-resume testing).  Returns every committed stage's
     output by name, plus the ``Runner`` under ``"_runner"``.
+
+    The vocabulary size picks the assembly path, after ``crosswalk``
+    commits: up to ``kg.MAX_BROADCAST_VOCAB`` surfaces the fused
+    ``extract_and_assemble`` kernel (one ``assembled`` stage over the raw
+    pages); past it the salted modular path (``mentions``, ``qualifiers``,
+    then ``assembled``, plus ``sentence_ctx`` with ``disambiguate``).
 
     ``disambiguate`` turns on embedding entity-link scoring: datagen plants
     the ambiguous surface + cue phrases, assembly emits the sentence context
@@ -307,12 +314,7 @@ def run_pipeline(
     hash term dictionary + encoded-triples projection — each a lineage-
     carrying checkpointed stage like the rest of the DAG.  The branch
     reads only ``pages``, so it runs beside the KG branch."""
-    params = {
-        "n_pages": n_pages,
-        "seed": seed,
-        "broadcast_vocab": broadcast_vocab,
-        "disambiguate": disambiguate,
-    }
+    params = {"n_pages": n_pages, "seed": seed, "disambiguate": disambiguate}
     d = generate(spark, n_pages, seed, with_ambiguity=disambiguate)
     ctx_dim = kg.CTX_DIM if disambiguate else None
 
@@ -361,17 +363,11 @@ def run_pipeline(
                 _submit_web_extras(_run)
 
             ctx_stage = []  # the modular disambiguate path's sentence_ctx
-            if fused and broadcast_vocab:
-                # the fused/broadcast paths hard-require a broadcast-sized
-                # vocab (plans/kg.MAX_BROADCAST_VOCAB); past the threshold,
-                # auto-switch to the salted modular path instead of failing
-                # mid-pipeline
-                crosswalk = r.wait("crosswalk")
-                n_vocab = crosswalk.select("surface_form").distinct().count()
-                if n_vocab > kg.MAX_BROADCAST_VOCAB:
-                    fused = False
-                    broadcast_vocab = False
-            if fused and broadcast_vocab:
+            # past the broadcast cap the salted modular path takes over
+            # instead of the fused kernel failing mid-pipeline
+            crosswalk = r.wait("crosswalk")
+            n_vocab = crosswalk.select("surface_form").distinct().count()
+            if n_vocab <= kg.MAX_BROADCAST_VOCAB:
                 # fully-fused narrow path (extract_and_assemble): html ->
                 # assembled rows in one Arrow stage, zero shuffles, one
                 # materialization.  Reads the raw pages table (not the
@@ -401,9 +397,7 @@ def run_pipeline(
                 _run(
                     "mentions",
                     lambda extracted, crosswalk: kg.detect_mentions(
-                        kg.split_sentences(english(extracted)),
-                        crosswalk,
-                        broadcast_vocab=broadcast_vocab,
+                        kg.split_sentences(english(extracted)), crosswalk
                     ),
                     upstream=["extracted", "crosswalk"],
                     entity_col="url",
@@ -531,11 +525,14 @@ class _StopRun(Exception):
 def main() -> None:
     from i2o_transform_spark.session import get_spark
 
-    ap = argparse.ArgumentParser(description="KG pipeline runner")
+    ap = argparse.ArgumentParser(
+        description="KG pipeline runner.  The vocabulary size picks the "
+        "assembly path: the fused Arrow kernel up to MAX_BROADCAST_VOCAB "
+        "surfaces, the salted modular path past it."
+    )
     ap.add_argument("--n-pages", type=int, default=2000)
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--no-broadcast-vocab", action="store_true")
     ap.add_argument("--disambiguate", action="store_true",
                     help="embedding entity-link scoring over planted ambiguity")
     ap.add_argument("--web-extras", action="store_true",
@@ -553,7 +550,6 @@ def main() -> None:
         args.out,
         n_pages=args.n_pages,
         seed=args.seed,
-        broadcast_vocab=not args.no_broadcast_vocab,
         disambiguate=args.disambiguate,
         web_extras=args.web_extras,
     )

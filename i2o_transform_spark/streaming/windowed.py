@@ -131,6 +131,12 @@ def stateful_running_totals(
     timeout horizon, not with history.  Batch inputs take the equivalent
     one-shot groupBy (same output schema, no state) so the batch run is the
     correctness oracle for the stream run.
+
+    Trigger note: an ``availableNow`` query over this operator never
+    terminates.  While any key holds a processing-time timeout Spark keeps
+    running no-data batches ("No new data but cleaning up state"), so
+    ``awaitTermination`` only returns on its timeout.  Use ``once`` (one
+    batch) for a bounded run, or a processing-time trigger and ``stop()``.
     """
     from pyspark.sql.types import (
         DoubleType,

@@ -1,7 +1,7 @@
 """End-to-end KG pipeline tests: the P/R >= 0.95 gate, the byte-identical
-extraction invariant, checkpoint/resume, lineage/metrics, and broadcast-vs-
-salted join path equivalence (BASELINE.md §2), and the runner's concurrent
-stage scheduling."""
+extraction invariant, checkpoint/resume, lineage/metrics, fused-vs-modular
+(salted join) assembly equivalence (BASELINE.md §2), and the runner's
+concurrent stage scheduling."""
 
 from __future__ import annotations
 
@@ -133,22 +133,25 @@ def test_qualifier_assembly(spark, data, pipeline_out):
     assert 100 <= amounts[0] and amounts[1] <= 999
 
 
-def test_resume_after_kill(spark, tmp_path):
+def test_resume_after_kill(spark, tmp_path, monkeypatch):
     """Kill after the mentions stage; a fresh runner must skip completed
-    stages and produce identical triples."""
+    stages and produce identical triples.  A vocabulary past
+    MAX_BROADCAST_VOCAB switches the runner to the salted modular path; the
+    clean run below stays on the fused path, so the two must agree."""
     out = str(tmp_path / "kg_resume")
-    partial = run_pipeline(
-        spark, out, n_pages=100, fused=False, stop_after="mentions"
-    )
-    assert "triples" not in partial  # the run really was cut short
-    # fresh full run over the same dir = resume
-    outs2 = run_pipeline(spark, out, n_pages=100, fused=False)
+    with monkeypatch.context() as m:
+        m.setattr(kg, "MAX_BROADCAST_VOCAB", 0)
+        partial = run_pipeline(spark, out, n_pages=100, stop_after="mentions")
+        assert "triples" not in partial  # the run really was cut short
+        # fresh full run over the same dir = resume
+        outs2 = run_pipeline(spark, out, n_pages=100)
     r = outs2["_runner"]
     assert "mentions" in r.skipped and "crosswalk" in r.skipped
     assert "assembled" in r.executed and "triples" in r.executed
     # and equals a clean-run result
     out_clean = str(tmp_path / "kg_clean")
     outs_clean = run_pipeline(spark, out_clean, n_pages=100)
+    assert "mentions" not in outs_clean  # the fused path
     a = _emitted(outs2)
     b = _emitted(outs_clean)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -196,11 +199,18 @@ def test_stages_scheduled_concurrently_in_dependency_order(pipeline_out):
 
 
 def test_rerun_executes_nothing(spark, pipeline_out):
-    """A second run over the same directory resumes every stage, and the
-    manifest that concurrent stages rewrote still parses."""
+    """A second run over the same directory resumes every stage, writes no
+    lineage or metrics rows, and the manifest that concurrent stages
+    rewrote still parses."""
     _, out_dir = pipeline_out
+
+    def n_rows(table):
+        return spark.read.parquet(os.path.join(out_dir, table)).count()
+
+    before = n_rows("_lineage"), n_rows("_metrics")
     r = run_pipeline(spark, out_dir, n_pages=N_PAGES)["_runner"]
     assert r.executed == [] and "triples" in r.skipped
+    assert (n_rows("_lineage"), n_rows("_metrics")) == before
     with open(os.path.join(out_dir, "_manifest.json")) as f:
         manifest = json.load(f)
     assert set(manifest) == set(r.skipped)
@@ -256,28 +266,14 @@ def test_failed_stage_fails_its_dependents(spark, tmp_path):
     assert not any(t.name.startswith("stage:") for t in threading.enumerate())
 
 
-def test_salted_path_equals_broadcast_path(spark, data):
-    """detect_mentions(broadcast) == detect_mentions(salted) — the skew path
-    must be semantics-preserving (north_star salted-key hash join)."""
-    cw = kg.compile_crosswalk(data["surface_vocab"], data["concept"], data["concept_rel"])
-    sents = kg.split_sentences(
-        kg.extract_text(data["pages"]).where(F.col("lang") == "en")
-    ).limit(2000)
-    a = kg.detect_mentions(sents, cw, broadcast_vocab=True)
-    b = kg.detect_mentions(sents, cw, broadcast_vocab=False)
-    cols = ["url", "sent_idx", "start", "len", "surface", "kind"]
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-    assert b.select(cols).exceptAll(a.select(cols)).count() == 0
-
-
 def test_auto_skew_planning(spark, data):
     """VERDICT r02 #7: the pipeline derives the salted-join layout from
     observed statistics.  On the planted HOT_SUBJ_PCT=30% hot-surface corpus
     plan_salt_buckets sizes buckets ~ ceil(hot_share x parallelism) > 1; on
     a uniform-key frame it returns 1 (no salting); detect_mentions with
-    broadcast_vocab='auto', salt_buckets=None emits identical mentions to
-    the explicit broadcast path; skew_aware_join picks broadcast for a
-    small dim and the salted path for a large skewed one, same rows."""
+    salt_buckets=None emits identical mentions to the default bucket count;
+    skew_aware_join picks broadcast for a small dim and the salted path for
+    a large skewed one, same rows."""
     from i2o_transform_spark.operators.joins import (
         plan_salt_buckets,
         skew_aware_join,
@@ -296,8 +292,7 @@ def test_auto_skew_planning(spark, data):
     b = plan_salt_buckets(skewed, "k")
     assert b > 1 and abs(b - 0.3 * par) <= max(2, 0.2 * par), (b, par)
 
-    # the pipeline auto-selects: vocab fits -> broadcast; forced salted path
-    # with salt_buckets=None derives buckets from the hot-surface stream
+    # salt_buckets=None derives buckets from the hot-surface stream
     cw = kg.compile_crosswalk(
         data["surface_vocab"], data["concept"], data["concept_rel"]
     )
@@ -305,15 +300,11 @@ def test_auto_skew_planning(spark, data):
         kg.extract_text(data["pages"]).where(F.col("lang") == "en")
     ).limit(2000).persist()
     cols = ["url", "sent_idx", "start", "len", "surface", "kind"]
-    auto = kg.detect_mentions(sents, cw, broadcast_vocab="auto")
-    explicit = kg.detect_mentions(sents, cw, broadcast_vocab=True)
-    assert auto.select(cols).exceptAll(explicit.select(cols)).count() == 0
-    assert explicit.select(cols).exceptAll(auto.select(cols)).count() == 0
-    salted_auto = kg.detect_mentions(
-        sents, cw, broadcast_vocab=False, salt_buckets=None
-    )
-    assert salted_auto.select(cols).exceptAll(explicit.select(cols)).count() == 0
-    assert explicit.select(cols).exceptAll(salted_auto.select(cols)).count() == 0
+    default = kg.detect_mentions(sents, cw)
+    salted_auto = kg.detect_mentions(sents, cw, salt_buckets=None)
+    assert salted_auto.select(cols).exceptAll(default.select(cols)).count() == 0
+    assert default.select(cols).exceptAll(salted_auto.select(cols)).count() == 0
+    assert default.count() > 0
     sents.unpersist()
 
     # strategy selection: small dim -> broadcast join; big skewed dim ->
@@ -330,8 +321,9 @@ def test_auto_skew_planning(spark, data):
 
 
 def test_fused_equals_modular_assembly(spark, data):
-    """assemble_sentences (fused zero-shuffle path) must emit exactly the
-    modular detect_mentions -> extract_qualifiers -> assemble_triples rows."""
+    """extract_and_assemble (fused zero-shuffle path) must emit exactly the
+    modular detect_mentions -> extract_qualifiers -> assemble_triples rows
+    (salted join)."""
     cw = kg.compile_crosswalk(
         data["surface_vocab"], data["concept"], data["concept_rel"]
     )
@@ -343,9 +335,7 @@ def test_fused_equals_modular_assembly(spark, data):
         kg.extract_qualifiers(sents, data["modifier_config"]),
         qualifier_kinds=("year", "amount"),
     )
-    fused = kg.assemble_sentences(sents, cw, data["modifier_config"])
-    fused_pd = kg.assemble_sentences_pandas(sents, cw, data["modifier_config"])
-    fused_one = kg.extract_and_assemble(
+    fused = kg.extract_and_assemble(
         data["pages"].where(F.col("lang") == "en"), cw, data["modifier_config"]
     )
     cols = [
@@ -354,10 +344,8 @@ def test_fused_equals_modular_assembly(spark, data):
     ]
     a = {tuple(r) for r in modular.select(cols).collect()}
     b = {tuple(r) for r in fused.select(cols).collect()}
-    c = {tuple(r) for r in fused_pd.select(cols).collect()}
-    d2 = {tuple(r) for r in fused_one.select(cols).collect()}
     sents.unpersist()
-    assert a == b == c == d2 and len(a) > 0
+    assert a == b and len(a) > 0
 
 
 def _pages_df(spark, rows):
@@ -400,16 +388,14 @@ def test_fused_equals_modular_on_messy_whitespace(spark, data):
         kg.extract_qualifiers(sents, data["modifier_config"]),
         qualifier_kinds=("year", "amount"),
     )
-    fused_pd = kg.assemble_sentences_pandas(sents, cw, data["modifier_config"])
-    fused_one = kg.extract_and_assemble(pages, cw, data["modifier_config"])
+    fused = kg.extract_and_assemble(pages, cw, data["modifier_config"])
     cols = [
         "url", "sent_idx", "subj_surface", "pred_surface", "obj_surface",
         "qualifier_year", "qualifier_amount",
     ]
     a = {tuple(r) for r in modular.select(cols).collect()}
-    c = {tuple(r) for r in fused_pd.select(cols).collect()}
-    d2 = {tuple(r) for r in fused_one.select(cols).collect()}
-    assert a == c == d2
+    b = {tuple(r) for r in fused.select(cols).collect()}
+    assert a == b
     assert len(a) >= 4  # the tab/newline-separated sentences did assemble
     # and at least one year qualifier survived the messy whitespace
     # (cols[-2] = qualifier_year; no fixture sentence carries an amount)
@@ -418,19 +404,16 @@ def test_fused_equals_modular_on_messy_whitespace(spark, data):
 
 def test_dual_domain_vocab_rejected(spark, data):
     """ADVICE r01: a surface mapped to both Predicate and an entity domain
-    makes mention routing ambiguous — every assembly path must reject it at
-    plan build time."""
+    makes mention routing ambiguous — the fused assembly kernel must reject
+    it at plan build time."""
     cw = spark.createDataFrame(
         [("acme corp", 1000, "acme corp", "Organization"),
          ("acme corp", 5000, "acme corp", "Predicate")],
         "surface_form string, concept_id long, canon_name string, "
         "canon_domain string",
     )
-    sents = kg.split_sentences(kg.extract_text(data["pages"])).limit(1)
     with pytest.raises(ValueError, match="Predicate and an entity domain"):
-        kg.assemble_sentences_pandas(sents, cw, data["modifier_config"])
-    with pytest.raises(ValueError, match="Predicate and an entity domain"):
-        kg.assemble_sentences(sents, cw, data["modifier_config"])
+        kg.extract_and_assemble(data["pages"], cw, data["modifier_config"])
 
 
 def test_invalid_modifier_pattern_rejected(spark, data):
@@ -443,9 +426,8 @@ def test_invalid_modifier_pattern_rejected(spark, data):
     cw = kg.compile_crosswalk(
         data["surface_vocab"], data["concept"], data["concept_rel"]
     )
-    sents = kg.split_sentences(kg.extract_text(data["pages"])).limit(1)
     with pytest.raises(ValueError, match="Java-only"):
-        kg.assemble_sentences_pandas(sents, cw, bad_cfg)
+        kg.extract_and_assemble(data["pages"], cw, bad_cfg)
 
 
 def test_qualifier_overflow_clamped(spark, data):
@@ -483,7 +465,8 @@ def test_qualifier_overflow_clamped(spark, data):
 def test_fused_equals_modular_with_10x_vocab(spark, data):
     """VERDICT r01 #6: the broadcast-variable vocab path must stay equal to
     the modular path at a vocabulary ~10x the fixture (padding surfaces that
-    never occur in the text must not perturb routing or matching)."""
+    never occur in the text must not perturb routing or matching).  A
+    deterministic quarter of the pages keeps the modular leg small."""
     cw = kg.compile_crosswalk(
         data["surface_vocab"], data["concept"], data["concept_rel"]
     )
@@ -497,23 +480,24 @@ def test_fused_equals_modular_with_10x_vocab(spark, data):
         .alias("canon_domain"),
     )
     big_cw = cw.unionByName(pad)
-    sents = kg.split_sentences(
-        kg.extract_text(data["pages"]).where(F.col("lang") == "en")
-    ).limit(500).persist()
+    pages = data["pages"].where(
+        (F.col("lang") == "en") & (F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    )
+    sents = kg.split_sentences(kg.extract_text(pages)).persist()
     modular = kg.assemble_triples(
         kg.detect_mentions(sents, big_cw),
         kg.extract_qualifiers(sents, data["modifier_config"]),
         qualifier_kinds=("year", "amount"),
     )
-    fused_pd = kg.assemble_sentences_pandas(sents, big_cw, data["modifier_config"])
+    fused = kg.extract_and_assemble(pages, big_cw, data["modifier_config"])
     cols = [
         "url", "sent_idx", "subj_surface", "pred_surface", "obj_surface",
         "qualifier_year", "qualifier_amount",
     ]
     a = {tuple(r) for r in modular.select(cols).collect()}
-    c = {tuple(r) for r in fused_pd.select(cols).collect()}
+    b = {tuple(r) for r in fused.select(cols).collect()}
     sents.unpersist()
-    assert a == c and len(a) > 0
+    assert a == b and len(a) > 0
 
 
 # ---------------------------------------------------------------------------
@@ -566,30 +550,28 @@ def test_embedding_link_recovers_planted_truth(spark, amb_data):
 
 def test_ctx_embedding_bitequal_across_paths(spark, amb_data):
     """The crc32 hashing-trick context embedding is bit-equal between the
-    JVM column-expression encoder (expression assembly) and the numpy
-    scatter in the Arrow kernel (pandas + fully-fused assembly)."""
-    cw = _amb_cw(amb_data)
-    sents = kg.split_sentences(
-        kg.extract_text(amb_data["pages"]).where(F.col("lang") == "en")
-    ).persist()
-    cols = ["url", "sent_idx", "subj_surface", "pred_surface", "obj_surface"]
+    JVM column-expression encoder over ``split_sentences`` (what the modular
+    path's ``sentence_ctx`` stage computes) and the numpy scatter in the
+    fused Arrow kernel, per (url, sent_idx)."""
+    from i2o_transform_spark.operators.entity_link import hashing_trick_embed
 
-    def key(df):
+    cw = _amb_cw(amb_data)
+    pages_en = amb_data["pages"].where(F.col("lang") == "en")
+
+    def by_sentence(df):
         return {
-            tuple(r[c] for c in cols) + (tuple(r["ctx"]),)
-            for r in df.select(*cols, "ctx").collect()
+            (r.url, r.sent_idx): tuple(r.ctx)
+            for r in df.select("url", "sent_idx", "ctx").collect()
         }
 
-    expr = key(kg.assemble_sentences(
-        sents, cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM))
-    pand = key(kg.assemble_sentences_pandas(
-        sents, cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM))
-    fused = key(kg.extract_and_assemble(
-        amb_data["pages"].where(F.col("lang") == "en"),
-        cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM))
-    sents.unpersist()
-    assert len(expr) > 0
-    assert expr == pand == fused
+    jvm = by_sentence(kg.split_sentences(kg.extract_text(pages_en)).select(
+        "url", "sent_idx",
+        hashing_trick_embed(F.col("tokens"), kg.CTX_DIM).alias("ctx"),
+    ))
+    fused = by_sentence(kg.extract_and_assemble(
+        pages_en, cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM))
+    assert len(fused) > 0
+    assert fused == {k: jvm[k] for k in fused}
 
 
 def test_disambiguation_modular_equals_fused(spark, amb_data):
@@ -671,15 +653,16 @@ def test_runner_disambiguate_end_to_end(spark, tmp_path):
     assert "entity_embeddings" in outs
 
 
-def test_runner_modular_disambiguate_end_to_end(spark, tmp_path):
-    """The stage DAG with fused=False, disambiguate=True: the context
-    embedding is its own ``sentence_ctx`` stage, declared upstream of
-    ``triples``, and the triples pass the same P/R check as the fused
-    path."""
+def test_runner_modular_disambiguate_end_to_end(spark, tmp_path, monkeypatch):
+    """The stage DAG on the salted modular path (a vocabulary past
+    MAX_BROADCAST_VOCAB) with disambiguate=True: the context embedding is
+    its own ``sentence_ctx`` stage, declared upstream of ``triples``, and
+    the triples pass the same P/R check as the fused path."""
     n = 200
+    monkeypatch.setattr(kg, "MAX_BROADCAST_VOCAB", 0)
     with _stage_spans() as spans:
         outs = run_pipeline(spark, str(tmp_path / "amb_mod"), n_pages=n,
-                            disambiguate=True, fused=False)
+                            disambiguate=True)
     _assert_upstream_ended_first(spans)
     assert "sentence_ctx" in spans["triples"][0]
     got = _emitted(outs)

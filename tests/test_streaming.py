@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from i2o_transform_spark.sources.tables import load_table
@@ -19,6 +20,18 @@ from i2o_transform_spark.streaming.windowed import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _no_stream_outlives_its_test(spark):
+    """Fail a test that leaves a streaming query running, and stop it: a
+    leftover query keeps its Python workers busy for the rest of the
+    session."""
+    yield
+    active = spark.streams.active
+    for q in active:
+        q.stop()
+    assert not active, f"streaming queries still active: {[q.name for q in active]}"
 
 
 def _stream_events(spark):
@@ -43,7 +56,7 @@ def _run_stream_to_memory(spark, sdf, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     return spark.table(name)
 
 
@@ -79,9 +92,11 @@ def test_watermark_attached_only_when_streaming(spark):
 
 
 def test_stateful_running_totals_stream_equals_batch(spark):
-    """applyInPandasWithState custom operator: after one availableNow pass
-    over the whole input, the latest per-user state equals the batch
-    aggregation (rounding to the stream's accumulator precision)."""
+    """applyInPandasWithState custom operator: after one batch over the
+    whole input, the latest per-user state equals the batch aggregation
+    (rounding to the stream's accumulator precision).  ``once``, not
+    ``availableNow``: with a processing-time timeout an availableNow query
+    never terminates (see ``stateful_running_totals``)."""
     from pyspark.sql.window import Window
 
     from i2o_transform_spark.streaming.windowed import stateful_running_totals
@@ -92,10 +107,10 @@ def test_stateful_running_totals_stream_equals_batch(spark):
         sdf.writeStream.format("memory")
         .queryName("state_totals")
         .outputMode("update")
-        .trigger(availableNow=True)
+        .trigger(once=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     updates = spark.table("state_totals")
     # keep the LAST update per user (update mode emits one row per trigger)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -143,7 +158,7 @@ def test_dedup_events_stream_equals_batch(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     stream = spark.table("dedup_events")
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
@@ -188,7 +203,7 @@ def test_kg_stream_triples_equal_batch(spark, tmp_path):
     q = stream_triples_to_sink(
         stream, cw, cm, d["modifier_config"], sink, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got = spark.read.parquet(sink)
 
     cols = sorted(expected.columns)
@@ -287,7 +302,7 @@ def test_kg_stream_disambiguation_equals_batch(spark, tmp_path):
         stream, cw, cm, d["modifier_config"], sink, str(tmp_path / "ckpt"),
         entity_embeddings=ee,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got = spark.read.parquet(sink)
 
     cols = sorted(expected.columns)
@@ -318,7 +333,7 @@ def test_enrich_events_stream_equals_batch(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     streamed = spark.table("enrich_sink")
     cols = ["event_id", "user_id", "event_type", "segment", "nation_key"]
     assert _rows(streamed, cols) == _rows(batch, cols)
@@ -373,7 +388,7 @@ def test_kg_stream_restart_from_checkpoint(spark, tmp_path):
         q = stream_triples_to_sink(
             stream, cw, cm, d["modifier_config"], sink, ckpt
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(180)
 
     run_once()
     n_first = spark.read.parquet(sink).count()
@@ -413,7 +428,7 @@ def test_attribution_join_stream_equals_batch(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     stream = spark.table("attr_join")
     cols = ["user_id", "l_event_id", "r_event_id", "l_ts", "r_ts", "r_value"]
     assert _rows(stream, cols) == _rows(batch, cols)
@@ -473,7 +488,7 @@ def test_windowed_counts_drop_late_data_past_watermark(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     add_file("f1", [
         (T(2024, 1, 1, 10, 0, 10), "click", 1.0),
@@ -535,7 +550,7 @@ def test_line_dedup_stream_equals_batch(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     stream = spark.table("line_dedup_stream")
 
     want = _rows(line_dedup_stream(prep(batch_docs)), ["line_md5", "line"])
@@ -580,7 +595,7 @@ def test_stream_incremental_cc_equals_batch(spark, tmp_path):
     q = stream_incremental_components(
         stream, labels_dir, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     assert os.path.exists(os.path.join(labels_dir, "_SUCCESS"))
     got = {
         r.node: r.root for r in spark.read.parquet(labels_dir).collect()
@@ -630,7 +645,7 @@ def test_stream_incremental_cc_recovers_from_swap_crash(spark, tmp_path):
         q = stream_incremental_components(
             stream, labels_dir, str(tmp_path / "ckpt")
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
 
     run_stream()
     assert os.path.exists(os.path.join(labels_dir, "_SUCCESS"))
@@ -690,7 +705,7 @@ def test_stream_canon_dedup_relabel_and_replay(spark, tmp_path):
             spark.readStream.schema(Q)
             .option("maxFilesPerTrigger", 1).parquet(src + "/*/")
         )
-        stream_canonical_dedup(
+        assert stream_canonical_dedup(
             stream, store, str(tmp_path / ckpt)
         ).awaitTermination(300)
 
@@ -745,7 +760,7 @@ def test_stream_structured_ingest_equals_batch_and_replays(spark, tmp_path):
             .parquet(str(src) + "/*/")
         )
         q = stream_structured_ingest(stream, store, str(tmp_path / ckpt))
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
 
     run("ckpt1")
     all_pages = spark.createDataFrame(
