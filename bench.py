@@ -189,7 +189,7 @@ def run_headline() -> None:
     timings["kg_pipeline"] = kg["sec"]
     # supplementary (NOT in the headline total, which stays comparable
     # round-over-round): the pipeline with embedding entity-link scoring —
-    # planted-ambiguity datagen + ctx emission + argmax election
+    # planted-ambiguity datagen + in-kernel argmax election
     kg_dis = kg_throughput(
         spark, n_pages=KG_BENCH_PAGES, repeats=2, disambiguate=True
     )
@@ -308,11 +308,10 @@ def kg_throughput(
         # in ONE Arrow stage (see extract_and_assemble docstring); the single
         # pipeline exchange is the triple dedup inside link_and_emit
         # disambiguate: fused in-kernel election (entity_candidates=) — the
-        # ctx matrix never crosses Arrow; candidate-frame build is in the
-        # timed region (it was inside link_and_emit before — same accounting)
+        # ctx matrix never crosses Arrow; the candidate-frame build is in
+        # the timed region
         asm = kgp.extract_and_assemble(
             pages.where(F.col("lang") == "en"), cw, d["modifier_config"],
-            ctx_dim=kgp.CTX_DIM if disambiguate else None,
             entity_candidates=(
                 kgp.entity_candidate_frame(cw, cm, ee) if disambiguate else None
             ),

@@ -208,12 +208,12 @@ def main() -> None:
     d2["pages"].write.mode("overwrite").parquet(pdir2)
     pages2 = spark.read.parquet(pdir2)
     asm2 = kg.extract_and_assemble(
-        pages2.where(F.col("lang") == "en"), cw2,
-        d2["modifier_config"], ctx_dim=kg.CTX_DIM,
+        pages2.where(F.col("lang") == "en"), cw2, d2["modifier_config"],
+        entity_candidates=kg.entity_candidate_frame(
+            cw2, cm2, d2["entity_embeddings"]
+        ),
     )
-    tri2 = kg.link_and_emit(
-        asm2, cw2, cm2, entity_embeddings=d2["entity_embeddings"]
-    )
+    tri2 = kg.link_and_emit(asm2, cw2, cm2)
     t2 = tree_of(tri2)
     lines2 = t2.splitlines()
     cut2 = next(
@@ -228,11 +228,13 @@ def main() -> None:
         f"KG pipeline with embedding entity-link scoring — "
         f"{n_ex2} exchange(s) on the data path",
         spine2,
-        "link_and_emit(entity_embeddings=...): the subject/object argmax-"
-        "cosine elections are `Project`s over a `BroadcastHashJoin` against "
-        "the pre-grouped candidate arrays — disambiguation adds ZERO "
-        "exchanges; the single data-path exchange is still the triple-dedup "
-        "hash aggregate.",
+        "extract_and_assemble(entity_candidates=...): the subject/object "
+        "argmax-cosine elections run inside the one assembly `MapInPandas` "
+        "against a broadcast variable of per-surface candidate matrices "
+        "(not a plan node), so the sentence context matrix never becomes a "
+        "column; link_and_emit then joins only the broadcast predicate "
+        "crosswalk — disambiguation adds ZERO exchanges, and the single "
+        "data-path exchange is still the triple-dedup hash aggregate.",
     ))
 
     sections.append((

@@ -241,8 +241,9 @@ def generate(
     ``with_ambiguity`` plants the AMB_SURFACE lexical ambiguity: AMB_PCT of
     sentences get the ambiguous subject plus a trailing cue phrase, and the
     goldens expect the cue-determined entity — solvable only by embedding
-    entity-link scoring (link_and_emit(entity_embeddings=...)), not by the
-    dictionary join alone.
+    entity-link scoring (the election at assembly,
+    extract_and_assemble(entity_candidates=...)), not by the dictionary
+    join alone.
     """
     spec = build_vocab_spec(with_ambiguity)
     n_ent = len(spec.entity_surfaces)

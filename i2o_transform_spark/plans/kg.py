@@ -19,8 +19,12 @@ Recasts the reference's ontology-mapping ETL as web-scale KG construction:
                       (MSSQL/OMOPLoader.sql:1690-1759)             + join
   assemble_triples    modifier reassembly J3 + domain routing F6   groupBy +
                       (MSSQL/OMOPLoader.sql:1034-1045, 1027)       min_by/max_by
-  emit_triples        DISTINCT dedup A5 + surrogate keys           dropDuplicates
-                      (MSSQL/OMOPLoader.sql:954, 347-426)          + xxhash ids
+  elect_entities      entity election where the sentence is        Arrow matmul
+                      assembled (embedding argmax, also in-kernel  (map-side)
+                      in extract_and_assemble)
+  link_and_emit       link J1 (entities only if not elected) +     broadcast
+                      DISTINCT dedup A5 + surrogate keys           joins + hash
+                      (MSSQL/OMOPLoader.sql:763-764, 954, 347-426) agg + xxhash
 
 Scale notes (100 TB / 10^12 pages):
 * the pages scan never shuffles until mention assembly, which groups by
@@ -47,8 +51,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -76,8 +78,8 @@ _SENT_SPLIT_RE = re.compile(SENT_SPLIT_PATTERN, re.ASCII)
 # the salted modular path (detect_mentions -> assemble_triples).
 # assemble-time check, not advisory (VERDICT r01).
 MAX_BROADCAST_VOCAB = 250_000
-# Default width of the hashing-trick context embedding emitted by the
-# assembly stages (ctx_dim=) for embedding entity-link scoring.  64 keeps
+# Width of the hashing-trick sentence context embedding that the entity
+# election scores candidates against (both assembly paths).  64 keeps
 # the planted cue-token buckets collision-free (datagen asserts it) while
 # the assembled row stays small; a model-served encoder replaces this on a
 # real cluster.
@@ -113,23 +115,17 @@ def _compile_qualifier_patterns(cfg: list[dict]) -> list[dict]:
     return out
 
 
-def _check_no_dual_domain(surf_rows) -> None:
+def _check_no_dual_domain(dual: list[str]) -> None:
     """Reject vocabularies where one surface_form maps to both 'Predicate'
-    and an entity domain.  The mention-election semantics (longest-match then
-    entity/predicate routing) are only deterministic when the partition is
-    exclusive — the modular path's max_by tie-break would otherwise pick an
-    arbitrary kind.  Asserted at plan build time by the fused assembly
-    kernel (ADVICE r01)."""
-    doms: dict[str, set] = {}
-    for r in surf_rows:
-        doms.setdefault(r.surface_form, set()).add(
-            "P" if r.canon_domain == "Predicate" else "E"
-        )
-    dual = sorted(s for s, d in doms.items() if len(d) > 1)
+    and an entity domain (``dual`` lists such surfaces).  The mention-
+    election semantics (longest-match then entity/predicate routing) are
+    only deterministic when the partition is exclusive — the modular path's
+    max_by tie-break would otherwise pick an arbitrary kind.  Asserted at
+    plan build time on both assembly paths (ADVICE r01)."""
     if dual:
         raise ValueError(
             "surface forms mapped to both Predicate and an entity domain "
-            f"(ambiguous mention routing): {dual[:10]}"
+            f"(ambiguous mention routing): {sorted(dual)[:10]}"
         )
 
 _EXTRACT_SCHEMA = StructType(
@@ -371,7 +367,9 @@ def detect_mentions(
     * longest-match-wins per (url, sent_idx, start) as groupBy + max_by —
       a hash aggregation with map-side partial combine, not a window sort.
 
-    Output: (url, warc_ts, sent_idx, start, len, surface, kind).
+    Output: (url, warc_ts, sent_idx, start, len, surface, kind).  Like the
+    fused kernel, raises ValueError on a surface mapped to both Predicate
+    and an entity domain.
 
     Auto-planning (VERDICT r02 #7): ``salt_buckets=None`` derives the bucket
     count from the observed hot-key share (operators.joins.plan_salt_buckets)
@@ -393,6 +391,19 @@ def detect_mentions(
     g2 = F.concat(F.col("tok"), F.lit(" "), t1)
     g3 = F.concat(F.col("tok"), F.lit(" "), t1, F.lit(" "), t2)
 
+    # the vocabulary is too big to collect: find dual-domain surfaces with
+    # one aggregation and bring at most 10 of them to the driver
+    pred_flag = F.when(F.col("canon_domain") == "Predicate", 1).otherwise(0)
+    _check_no_dual_domain([
+        r.surface_form
+        for r in crosswalk.groupBy("surface_form")
+        .agg(F.min(pred_flag).alias("lo"), F.max(pred_flag).alias("hi"))
+        .where(F.col("lo") != F.col("hi"))
+        .select("surface_form")
+        .orderBy("surface_form")
+        .limit(10)
+        .collect()
+    ])
     surfaces = crosswalk.select(
         F.col("surface_form").alias("gram"),
         F.col("canon_domain").alias("kind"),
@@ -443,7 +454,10 @@ def _collect_assembly_vocab(crosswalk: DataFrame, modifier_config: DataFrame):
     the common Java/Python regex dialect (compiled here with re.ASCII so the
     kernels match rlike's ASCII \\s/\\w/\\d semantics)."""
     surf_rows = crosswalk.select("surface_form", "canon_domain").distinct().collect()
-    _check_no_dual_domain(surf_rows)
+    pred_set = {r.surface_form for r in surf_rows if r.canon_domain == "Predicate"}
+    _check_no_dual_domain(list(pred_set.intersection(
+        r.surface_form for r in surf_rows if r.canon_domain != "Predicate"
+    )))
     if len(surf_rows) > MAX_BROADCAST_VOCAB:
         raise ValueError(
             f"vocabulary ({len(surf_rows)} surfaces) exceeds "
@@ -452,13 +466,10 @@ def _collect_assembly_vocab(crosswalk: DataFrame, modifier_config: DataFrame):
             "assemble_triples), which run_pipeline picks by itself"
         )
     by_len: dict[int, set] = {1: set(), 2: set(), 3: set()}
-    pred_set: set = set()
     for r in surf_rows:
         n = len(r.surface_form.split(" "))
         if n in by_len:
             by_len[n].add(r.surface_form)
-        if r.canon_domain == "Predicate":
-            pred_set.add(r.surface_form)
     first2 = {x.split(" ")[0] for x in by_len[2]}
     first3 = {x.split(" ")[0] for x in by_len[3]}
     cfg = _compile_qualifier_patterns(
@@ -467,32 +478,27 @@ def _collect_assembly_vocab(crosswalk: DataFrame, modifier_config: DataFrame):
     return by_len, pred_set, first2, first3, cfg
 
 
-def _assembled_schema(cfg: list[dict], ctx_dim: int | None = None) -> StructType:
-    fields = [
+def _assembled_schema(cfg: list[dict]) -> StructType:
+    return StructType([
         StructField("url", StringType()),
         StructField("warc_ts", TimestampType()),
         StructField("sent_idx", IntegerType()),
         StructField("subj_surface", StringType()),
         StructField("pred_surface", StringType()),
         StructField("obj_surface", StringType()),
-    ] + [StructField(f"qualifier_{s['kind']}", IntegerType()) for s in cfg]
-    if ctx_dim:
-        fields.append(StructField("ctx", ArrayType(DoubleType())))
-    return StructType(fields)
+    ] + [StructField(f"qualifier_{s['kind']}", IntegerType()) for s in cfg])
 
 
-def _make_assembler(
-    by_len, pred_set, first2, first3, cfg, ctx_dim=None, ctx_matrix_out=False
-):
+def _make_assembler(by_len, pred_set, first2, first3, cfg, with_ctx=False):
     """Build the vectorized per-batch assembly kernel: token arrays ->
-    assembled (subj, pred, obj, qualifiers[, ctx]) rows.  numpy explode +
+    assembled (subj, pred, obj, qualifiers) rows.  numpy explode +
     Series.isin hash probes + drop_duplicates first/last election — no
-    per-row Python anywhere.  With ``ctx_dim`` the kernel also emits the
-    sentence's hashing-trick context embedding (crc32 buckets, bit-equal to
-    the JVM encoder ``operators.entity_link.hashing_trick_embed``) for
-    downstream embedding entity-link scoring — computed from the already-
-    exploded token array with one np.add.at scatter, so it is free of any
-    extra pass over the text."""
+    per-row Python anywhere.  With ``with_ctx`` the kernel also returns the
+    kept sentences' (B, CTX_DIM) hashing-trick context matrix (crc32
+    buckets, bit-equal to the JVM encoder
+    ``operators.entity_link.hashing_trick_embed``) for the entity election
+    — computed from the already-exploded token array with one np.add.at
+    scatter, so it is free of any extra pass over the text."""
     import numpy as np
 
     qual_names = [f"qualifier_{s['kind']}" for s in cfg]
@@ -626,19 +632,15 @@ def _make_assembler(
             res[qn] = pd.to_numeric(
                 res.index.to_series().map(qmin), errors="coerce"
             ).astype("Int32")
-        if ctx_dim:
+        if with_ctx:
             from i2o_transform_spark.operators.entity_link import (
                 hashing_trick_embed_np,
             )
 
-            ctx = hashing_trick_embed_np(flat, row, nrow, ctx_dim)
-            ctx_sel = ctx[keep.to_numpy()]
-            if ctx_matrix_out:
-                # fused-election path: hand the dense matrix straight to the
-                # in-kernel election — the (B, dim) float block never gets
-                # chopped into per-row Python lists or serialized over Arrow
-                return res.reset_index(drop=True), ctx_sel
-            res["ctx"] = list(ctx_sel)
+            # the dense block goes straight to the in-kernel election: it is
+            # never chopped into per-row lists or serialized over Arrow
+            ctx = hashing_trick_embed_np(flat, row, nrow, CTX_DIM)
+            return res.reset_index(drop=True), ctx[keep.to_numpy()]
         return res.reset_index(drop=True)
 
     return assemble
@@ -648,7 +650,6 @@ def extract_and_assemble(
     pages: DataFrame,
     crosswalk: DataFrame,
     modifier_config: DataFrame,
-    ctx_dim: int | None = None,
     entity_candidates: DataFrame | None = None,
 ) -> DataFrame:
     """The whole narrow path — html -> text -> sentences -> assembled triples
@@ -665,26 +666,25 @@ def extract_and_assemble(
     that path (property-tested); the byte-identical-text invariant is still
     checked by the separate extract_text stage in the runner.
 
-    With ``entity_candidates`` (surface_form, entity_id, emb; requires
-    ``ctx_dim``) the embedding entity-link **election runs inside this same
-    kernel**: the sentence context matrix feeds the argmax-cosine election
-    as a dense numpy block and is then discarded — the 8·ctx_dim bytes/row
-    of ctx never cross Arrow and never exist as a Spark column.  Output
-    carries elected ``subj_id``/``obj_id`` longs instead (rows whose subject
-    or object surface has no candidate are dropped, the dictionary-join
-    inner semantics, MSSQL/OMOPLoader.sql:763-764); ``link_and_emit``
-    detects the precomputed ids and skips its own disambiguation stage.
-    Election identical to the staged kernels — equivalence pytest-pinned.
+    With ``entity_candidates`` (surface_form, entity_id, emb with CTX_DIM-
+    wide embeddings, see :func:`entity_candidate_frame`) the embedding
+    entity-link **election runs inside this same kernel**: the sentence
+    context matrix feeds the argmax-cosine election as a dense numpy block
+    and is then discarded — it never crosses Arrow and never exists as a
+    Spark column.  Output carries elected ``subj_id``/``obj_id`` longs
+    (rows whose subject or object surface has no candidate are dropped, the
+    dictionary-join inner semantics, MSSQL/OMOPLoader.sql:763-764), so
+    ``link_and_emit`` links predicates only.  The modular path elects the
+    same ids with :func:`elect_entities` — equivalence pytest-pinned.
     """
     vocab = _collect_assembly_vocab(crosswalk, modifier_config)
     bc = pages.sparkSession.sparkContext.broadcast(vocab)
 
     import numpy as np
 
-    fused_elect = entity_candidates is not None
-    if fused_elect:
-        if not ctx_dim:
-            raise ValueError("entity_candidates requires ctx_dim")
+    elect = entity_candidates is not None
+    out_schema = _assembled_schema(vocab[4])
+    if elect:
         from i2o_transform_spark.operators.entity_link import (
             _collect_candidate_table,
             elect_entity_ids_np,
@@ -693,19 +693,21 @@ def extract_and_assemble(
         cand_table = _collect_candidate_table(
             entity_candidates, "surface_form", "entity_id", "emb"
         )
+        widths = {mat.shape[1] for _, mat in cand_table.values()}
+        if widths - {CTX_DIM}:
+            raise ValueError(
+                f"candidate embeddings must be CTX_DIM={CTX_DIM} wide "
+                f"(the sentence context width), got widths {sorted(widths)}"
+            )
         bc_cand = pages.sparkSession.sparkContext.broadcast(cand_table)
         out_schema = StructType(
-            list(_assembled_schema(vocab[4], None))
+            list(out_schema)
             + [StructField("subj_id", LongType()), StructField("obj_id", LongType())]
         )
-    else:
-        out_schema = _assembled_schema(vocab[4], ctx_dim)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _make_assembler(
-            *bc.value, ctx_dim=ctx_dim, ctx_matrix_out=fused_elect
-        )
-        cand = bc_cand.value if fused_elect else None
+        kernel = _make_assembler(*bc.value, with_ctx=elect)
+        cand = bc_cand.value if elect else None
         for pdf in batches:
             nrow = len(pdf)
             if nrow == 0:
@@ -738,7 +740,7 @@ def extract_and_assemble(
             )
             if res is None:
                 continue
-            if fused_elect:
+            if elect:
                 res, ctx_mat = res
                 subj_ids, obj_ids = elect_entity_ids_np(
                     cand, res["subj_surface"], res["obj_surface"], ctx_mat
@@ -850,9 +852,10 @@ def entity_candidate_frame(
     entity-link scoring: every non-predicate crosswalk surface joined to its
     canonical id's embedding.  When several source concepts merged into one
     canon id, the min-concept_id embedding is the deterministic
-    representative.  Vocabulary-sized — feeds the broadcast election in
-    :func:`link_and_emit` or the fused kernel in
-    :func:`extract_and_assemble` (``entity_candidates=``)."""
+    representative.  Vocabulary-sized — the broadcast candidate table of
+    the entity election on either assembly path
+    (:func:`extract_and_assemble` ``entity_candidates=``,
+    :func:`elect_entities`)."""
     cw = crosswalk.join(canon_map, "concept_id").select(
         "surface_form", "concept_id", "canon_id", "canon_domain"
     ).distinct()
@@ -867,31 +870,53 @@ def entity_candidate_frame(
     )
 
 
+def elect_entities(
+    assembled: DataFrame,
+    sentences: DataFrame,
+    entity_candidates: DataFrame,
+) -> DataFrame:
+    """The entity election on the modular path — the twin of
+    :func:`extract_and_assemble` with ``entity_candidates=``.
+
+    Joins the assembled rows to their sentences' tokens on (url, sent_idx),
+    so the context embedding (JVM ``hashing_trick_embed``, bit-equal to the
+    fused kernel's numpy scatter) is computed for assembled sentences only,
+    then elects ``subj_id``/``obj_id`` in one Arrow pass
+    (operators.entity_link.embedding_disambiguate_dual_pandas, same argmax /
+    lowest-id election and inner-join drop as the fused kernel)."""
+    from i2o_transform_spark.operators.entity_link import (
+        embedding_disambiguate_dual_pandas,
+        hashing_trick_embed,
+    )
+
+    with_ctx = assembled.join(
+        sentences.select("url", "sent_idx", "tokens"), ["url", "sent_idx"]
+    ).select(
+        *assembled.columns,
+        hashing_trick_embed(F.col("tokens"), CTX_DIM).alias("ctx"),
+    )
+    return embedding_disambiguate_dual_pandas(
+        with_ctx, entity_candidates, surface_col="surface_form"
+    )
+
+
 def link_and_emit(
     assembled: DataFrame,
     crosswalk: DataFrame,
     canon_map: DataFrame,
-    entity_embeddings: DataFrame | None = None,
-    ctx: DataFrame | None = None,
 ) -> DataFrame:
     """Entity/predicate linking + canonical-id application + dedup + ids.
 
     Each surface joins the broadcast crosswalk (1->many fan-out preserved,
-    MSSQL/OMOPLoader.sql:763-764), then the CC merge map.  Triple ids are
-    content-derived (SURVEY §1.3) — deterministic across retries/cluster
-    sizes.  Dedup: one row per (subj, pred, obj, url) — the reference's
-    per-insert DISTINCT (A5).
-
-    With ``entity_embeddings`` (concept_id, emb) the entity side switches
-    from 1->many fan-out to **embedding entity-link scoring** (north_star):
-    each subject/object surface resolves to the argmax-cosine candidate
-    against the sentence's context embedding — the assembled frame must
-    carry a ``ctx`` column (assembly stages' ``ctx_dim=``), or a separate
-    ``ctx`` frame (url, sent_idx, ctx) is joined.  Disambiguation is
-    map-side (broadcast pre-grouped candidates + aggregate fold,
-    operators.entity_link) — it adds no shuffle; predicates keep the
-    reference's fan-out semantics (a predicate synonym genuinely means
-    several canonical relations)."""
+    MSSQL/OMOPLoader.sql:763-764), then the CC merge map.  When the
+    assembled rows already carry elected ``subj_id``/``obj_id`` (the entity
+    election ran where the sentence was assembled:
+    :func:`extract_and_assemble` ``entity_candidates=`` or
+    :func:`elect_entities`), only predicates are linked — a predicate
+    synonym genuinely means several canonical relations, so they keep the
+    fan-out.  Triple ids are content-derived (SURVEY §1.3) — deterministic
+    across retries/cluster sizes.  Dedup: one row per (subj, pred, obj,
+    url) — the reference's per-insert DISTINCT (A5)."""
     cw = crosswalk.join(
         canon_map, "concept_id"
     ).select(
@@ -907,51 +932,17 @@ def link_and_emit(
         ).distinct()
     )
     if "subj_id" in assembled.columns and "obj_id" in assembled.columns:
-        # fused-election path (extract_and_assemble(entity_candidates=...)):
-        # entity ids are already elected in the assembly kernel — only the
-        # predicate crosswalk join (fan-out preserving) remains
         linked = assembled.join(pred_cw, "pred_surface")
-    elif entity_embeddings is not None:
-        from i2o_transform_spark.operators.entity_link import (
-            embedding_disambiguate_dual_pandas,
-        )
-
-        if ctx is not None:
-            assembled = assembled.join(ctx, ["url", "sent_idx"])
-        if "ctx" not in assembled.columns:
-            raise ValueError(
-                "embedding linking needs a ctx column: assemble with "
-                "ctx_dim=... or pass a ctx frame (url, sent_idx, ctx)"
-            )
-        ent_cand = entity_candidate_frame(
-            crosswalk, canon_map, entity_embeddings
-        )
-        # both elections in ONE Arrow pass (r02 throughput fix) — same
-        # argmax/lowest-id election as the expression fold, equivalence
-        # pytest-pinned (tests/test_operators.py)
-        linked = embedding_disambiguate_dual_pandas(
-            assembled,
-            ent_cand,
-            surface_col="surface_form",
-        )
-        linked = linked.join(pred_cw, "pred_surface")
     else:
-        subj_cw = F.broadcast(
-            cw.where(F.col("canon_domain") != "Predicate").select(
-                F.col("surface_form").alias("subj_surface"),
-                F.col("canon_id").alias("subj_id"),
-            ).distinct()
-        )
-        obj_cw = F.broadcast(
-            cw.where(F.col("canon_domain") != "Predicate").select(
-                F.col("surface_form").alias("obj_surface"),
-                F.col("canon_id").alias("obj_id"),
-            ).distinct()
-        )
+        ent_cw = cw.where(F.col("canon_domain") != "Predicate").select(
+            "surface_form", "canon_id"
+        ).distinct()
         linked = (
-            assembled.join(subj_cw, "subj_surface")
+            assembled.join(
+                F.broadcast(ent_cw.toDF("subj_surface", "subj_id")), "subj_surface"
+            )
             .join(pred_cw, "pred_surface")
-            .join(obj_cw, "obj_surface")
+            .join(F.broadcast(ent_cw.toDF("obj_surface", "obj_id")), "obj_surface")
         )
     # deterministic dedup: keep the earliest sentence occurrence per
     # (s, p, o, url) — dropDuplicates alone would keep arbitrary qualifiers

@@ -300,12 +300,14 @@ def run_pipeline(
     commits: up to ``kg.MAX_BROADCAST_VOCAB`` surfaces the fused
     ``extract_and_assemble`` kernel (one ``assembled`` stage over the raw
     pages); past it the salted modular path (``mentions``, ``qualifiers``,
-    then ``assembled``, plus ``sentence_ctx`` with ``disambiguate``).
+    then ``assembled``).
 
     ``disambiguate`` turns on embedding entity-link scoring: datagen plants
-    the ambiguous surface + cue phrases, assembly emits the sentence context
-    embedding, and link_and_emit resolves entity surfaces by argmax cosine
-    against the entity_embeddings stage instead of 1->many fan-out.
+    the ambiguous surface + cue phrases, and the ``assembled`` stage (on
+    either path) resolves entity surfaces to ``subj_id``/``obj_id`` by
+    argmax cosine between the sentence context embedding and the
+    entity_embeddings stage instead of 1->many fan-out; ``triples`` then
+    links predicates only.
 
     ``web_extras`` adds the web-source families to the DAG (the r04
     endurance ask): pages enriched with deterministic structured-data
@@ -316,7 +318,6 @@ def run_pipeline(
     reads only ``pages``, so it runs beside the KG branch."""
     params = {"n_pages": n_pages, "seed": seed, "disambiguate": disambiguate}
     d = generate(spark, n_pages, seed, with_ambiguity=disambiguate)
-    ctx_dim = kg.CTX_DIM if disambiguate else None
 
     with Runner(spark, out_dir, params) as r:
 
@@ -362,7 +363,6 @@ def run_pipeline(
             if web_extras:
                 _submit_web_extras(_run)
 
-            ctx_stage = []  # the modular disambiguate path's sentence_ctx
             # past the broadcast cap the salted modular path takes over
             # instead of the fused kernel failing mid-pipeline
             crosswalk = r.wait("crosswalk")
@@ -379,7 +379,6 @@ def run_pipeline(
                 def assemble(pages, crosswalk, modcfg, ent_emb=None, canon_map=None):
                     return kg.extract_and_assemble(
                         english(pages), crosswalk, modcfg,
-                        ctx_dim=ctx_dim,
                         entity_candidates=(
                             kg.entity_candidate_frame(crosswalk, canon_map, ent_emb)
                             if disambiguate else None
@@ -414,50 +413,33 @@ def run_pipeline(
                     row.kind
                     for row in r.wait("modifier_config").select("kind").collect()
                 )
+
+                def assemble(mentions, qualifiers, extracted=None,
+                             crosswalk=None, canon_map=None, ent_emb=None):
+                    asm = kg.assemble_triples(mentions, qualifiers, kinds)
+                    if not disambiguate:
+                        return asm
+                    return kg.elect_entities(
+                        asm,
+                        kg.split_sentences(english(extracted)),
+                        kg.entity_candidate_frame(crosswalk, canon_map, ent_emb),
+                    )
+
                 _run(
                     "assembled",
-                    lambda mentions, qualifiers: kg.assemble_triples(
-                        mentions, qualifiers, kinds
+                    assemble,
+                    upstream=["mentions", "qualifiers"]
+                    + (
+                        ["extracted", "crosswalk", "canon_map", "entity_embeddings"]
+                        if disambiguate else []
                     ),
-                    upstream=["mentions", "qualifiers"],
                     entity_col="url",
-                )
-                if disambiguate:
-                    # modular path: the context embedding is its own narrow
-                    # stage over the sentence frame (fused assembly emits
-                    # it in-line instead)
-                    from i2o_transform_spark.operators.entity_link import (
-                        hashing_trick_embed,
-                    )
-
-                    _run(
-                        "sentence_ctx",
-                        lambda extracted: kg.split_sentences(
-                            english(extracted)
-                        ).select(
-                            "url",
-                            "sent_idx",
-                            hashing_trick_embed(F.col("tokens"), kg.CTX_DIM).alias(
-                                "ctx"
-                            ),
-                        ),
-                        upstream=["extracted"],
-                        entity_col="url",
-                    )
-                    ctx_stage = ["sentence_ctx"]
-
-            def link(assembled, crosswalk, canon_map, ent_emb=None, ctx=None):
-                return kg.link_and_emit(
-                    assembled, crosswalk, canon_map,
-                    entity_embeddings=ent_emb, ctx=ctx,
                 )
 
             _run(
                 "triples",
-                link,
-                upstream=["assembled", "crosswalk", "canon_map"]
-                + (["entity_embeddings"] if disambiguate else [])
-                + ctx_stage,
+                kg.link_and_emit,
+                upstream=["assembled", "crosswalk", "canon_map"],
                 entity_col="subj_id",
                 partition_by=["pred_id"],
             )

@@ -3114,15 +3114,16 @@ def el_embedding_link_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def el_kg_disambig_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-pipeline embedding entity-link scoring gate: with planted lexical
     ambiguity (datagen AMB_SURFACE + cue phrases), the fused pipeline with
-    link_and_emit(entity_embeddings=...) must recover the cue-determined
+    the in-kernel election (extract_and_assemble(entity_candidates=...))
+    must recover the cue-determined
     entity for EVERY ambiguous mention and keep overall triples == goldens
     exactly — the dictionary join alone would fan each ambiguous mention
     out to both entities and fail this."""
     from i2o_transform_spark.datagen import AMB_BASE, generate
     from i2o_transform_spark.plans.kg import (
-        CTX_DIM,
         canonicalize_concepts,
         compile_crosswalk,
+        entity_candidate_frame,
         extract_and_assemble,
         link_and_emit,
     )
@@ -3132,10 +3133,10 @@ def el_kg_disambig_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = canonicalize_concepts(cw)
     asm = extract_and_assemble(
         d["pages"].where(F.col("lang") == "en"), cw, d["modifier_config"],
-        ctx_dim=CTX_DIM,
+        entity_candidates=entity_candidate_frame(cw, cm, d["entity_embeddings"]),
     )
     emitted = (
-        link_and_emit(asm, cw, cm, entity_embeddings=d["entity_embeddings"])
+        link_and_emit(asm, cw, cm)
         .select("subj_id", "pred_id", "obj_id")
         .distinct()
         .persist()

@@ -26,25 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def stream_assembled(
-    pages_stream: DataFrame,
-    crosswalk: DataFrame,
-    modifier_config: DataFrame,
-    ctx_dim: int | None = None,
-) -> DataFrame:
-    """The fused html -> assembled-surface-rows stage on a streaming pages
-    DataFrame.  Stateless (no watermark, no aggregation) -> append mode;
-    the plan is the same single MapInPandas as the batch path, so
-    stream == batch row-for-row (tests/test_streaming.py).  ``ctx_dim``
-    emits the context embedding for in-stream entity disambiguation."""
-    from i2o_transform_spark.plans.kg import extract_and_assemble
-
-    return extract_and_assemble(
-        pages_stream.where(F.col("lang") == "en"), crosswalk, modifier_config,
-        ctx_dim=ctx_dim,
-    )
-
-
 def stream_triples_to_sink(
     pages_stream: DataFrame,
     crosswalk: DataFrame,
@@ -57,25 +38,34 @@ def stream_triples_to_sink(
     """End-to-end streaming triples: fused extraction in the stream plan,
     link + dedup + cross-batch anti-join + parquet append per micro-batch.
 
+    The stream plan is the batch path's single stateless MapInPandas
+    (``extract_and_assemble``) in append mode, so stream == batch
+    row-for-row (tests/test_streaming.py).  With ``entity_embeddings`` the
+    entity election runs in that kernel, so the micro-batches already carry
+    ``subj_id``/``obj_id``.
+
     Returns the started StreamingQuery.  Within a micro-batch,
     ``link_and_emit`` dedups (s, p, o, url); across batches the sink's
     existing triple_ids are anti-joined so a page seen in two WARC segments
     (or a replayed batch) emits nothing new.
     """
-    from i2o_transform_spark.plans.kg import link_and_emit
+    from i2o_transform_spark.plans.kg import (
+        entity_candidate_frame,
+        extract_and_assemble,
+        link_and_emit,
+    )
 
-    from i2o_transform_spark.plans.kg import CTX_DIM
-
-    assembled = stream_assembled(
-        pages_stream, crosswalk, modifier_config,
-        ctx_dim=CTX_DIM if entity_embeddings is not None else None,
+    assembled = extract_and_assemble(
+        pages_stream.where(F.col("lang") == "en"), crosswalk, modifier_config,
+        entity_candidates=(
+            entity_candidate_frame(crosswalk, canon_map, entity_embeddings)
+            if entity_embeddings is not None else None
+        ),
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        triples = link_and_emit(
-            batch_df, crosswalk, canon_map, entity_embeddings=entity_embeddings
-        )
+        triples = link_and_emit(batch_df, crosswalk, canon_map)
         if os.path.exists(os.path.join(sink_dir, "_SUCCESS")):
             seen = spark.read.parquet(sink_dir).select("triple_id")
             triples = triples.join(seen, "triple_id", "left_anti")

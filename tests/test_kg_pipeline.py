@@ -402,18 +402,27 @@ def test_fused_equals_modular_on_messy_whitespace(spark, data):
     assert any(t[-2] is not None for t in a)
 
 
-def test_dual_domain_vocab_rejected(spark, data):
+@pytest.mark.parametrize("path", ["extract_and_assemble", "detect_mentions"])
+def test_dual_domain_vocab_rejected(spark, data, path):
     """ADVICE r01: a surface mapped to both Predicate and an entity domain
-    makes mention routing ambiguous — the fused assembly kernel must reject
-    it at plan build time."""
+    makes mention routing ambiguous — both assembly paths (the fused kernel
+    and the salted mention join) must reject it at plan build time."""
     cw = spark.createDataFrame(
         [("acme corp", 1000, "acme corp", "Organization"),
-         ("acme corp", 5000, "acme corp", "Predicate")],
+         ("acme corp", 5000, "acme corp", "Predicate"),
+         ("plain", 7000, "plain", "Organization")],
         "surface_form string, concept_id long, canon_name string, "
         "canon_domain string",
     )
-    with pytest.raises(ValueError, match="Predicate and an entity domain"):
-        kg.extract_and_assemble(data["pages"], cw, data["modifier_config"])
+    with pytest.raises(
+        ValueError, match=r"Predicate and an entity domain.*\['acme corp'\]"
+    ):
+        if path == "extract_and_assemble":
+            kg.extract_and_assemble(data["pages"], cw, data["modifier_config"])
+        else:
+            kg.detect_mentions(
+                kg.split_sentences(kg.extract_text(data["pages"])), cw
+            )
 
 
 def test_invalid_modifier_pattern_rejected(spark, data):
@@ -529,11 +538,11 @@ def test_embedding_link_recovers_planted_truth(spark, amb_data):
         amb_data["pages"].where(F.col("lang") == "en"),
         cw,
         amb_data["modifier_config"],
-        ctx_dim=kg.CTX_DIM,
+        entity_candidates=kg.entity_candidate_frame(
+            cw, canon, amb_data["entity_embeddings"]
+        ),
     )
-    triples = kg.link_and_emit(
-        assembled, cw, canon, entity_embeddings=amb_data["entity_embeddings"]
-    )
+    triples = kg.link_and_emit(assembled, cw, canon)
     got = triples.select("subj_id", "pred_id", "obj_id").distinct()
     gold = amb_data["golden_triples"].select(
         "subj_id", "pred_id", "obj_id"
@@ -550,91 +559,68 @@ def test_embedding_link_recovers_planted_truth(spark, amb_data):
 
 def test_ctx_embedding_bitequal_across_paths(spark, amb_data):
     """The crc32 hashing-trick context embedding is bit-equal between the
-    JVM column-expression encoder over ``split_sentences`` (what the modular
-    path's ``sentence_ctx`` stage computes) and the numpy scatter in the
-    fused Arrow kernel, per (url, sent_idx)."""
-    from i2o_transform_spark.operators.entity_link import hashing_trick_embed
+    JVM column-expression encoder (what the modular path's election
+    computes) and the numpy scatter the fused kernel elects with, on the
+    same ``split_sentences`` token arrays, per (url, sent_idx).  That the
+    kernel tokenizes like ``split_sentences`` is pinned by the fused ==
+    modular assembly tests."""
+    import numpy as np
 
-    cw = _amb_cw(amb_data)
+    from i2o_transform_spark.operators.entity_link import (
+        hashing_trick_embed,
+        hashing_trick_embed_np,
+    )
+
     pages_en = amb_data["pages"].where(F.col("lang") == "en")
-
-    def by_sentence(df):
-        return {
-            (r.url, r.sent_idx): tuple(r.ctx)
-            for r in df.select("url", "sent_idx", "ctx").collect()
-        }
-
-    jvm = by_sentence(kg.split_sentences(kg.extract_text(pages_en)).select(
-        "url", "sent_idx",
+    rows = kg.split_sentences(kg.extract_text(pages_en)).select(
+        "url", "sent_idx", "tokens",
         hashing_trick_embed(F.col("tokens"), kg.CTX_DIM).alias("ctx"),
-    ))
-    fused = by_sentence(kg.extract_and_assemble(
-        pages_en, cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM))
-    assert len(fused) > 0
-    assert fused == {k: jvm[k] for k in fused}
+    ).collect()
+    assert len(rows) > 0
+    toks = [r.tokens for r in rows]
+    flat = np.concatenate([np.asarray(t, dtype=object) for t in toks])
+    row_ids = np.repeat(np.arange(len(rows)), [len(t) for t in toks])
+    numpy_ctx = hashing_trick_embed_np(flat, row_ids, len(rows), kg.CTX_DIM)
+    jvm = {(r.url, r.sent_idx): tuple(r.ctx) for r in rows}
+    fused = {
+        (r.url, r.sent_idx): tuple(v) for r, v in zip(rows, numpy_ctx.tolist())
+    }
+    assert fused == jvm
 
 
 def test_disambiguation_modular_equals_fused(spark, amb_data):
-    """link_and_emit with an in-line ctx column (fused assembly) and with a
-    separately-joined ctx frame (modular assembly) emit identical triples."""
+    """The modular election as run_pipeline composes it (assemble_triples
+    -> elect_entities over the sentences' JVM context embedding) and the
+    in-kernel election (extract_and_assemble(entity_candidates=...), where
+    ctx never crosses Arrow) elect the same entities: after link_and_emit
+    the triples are identical on all six columns, and neither assembled
+    frame carries a ctx column."""
     cw = _amb_cw(amb_data)
     canon = kg.canonicalize_concepts(cw)
-    ee = amb_data["entity_embeddings"]
+    cand = kg.entity_candidate_frame(cw, canon, amb_data["entity_embeddings"])
     pages_en = amb_data["pages"].where(F.col("lang") == "en")
-    fused_t = kg.link_and_emit(
-        kg.extract_and_assemble(
-            pages_en, cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM
-        ),
-        cw, canon, entity_embeddings=ee,
-    )
-    from i2o_transform_spark.operators.entity_link import hashing_trick_embed
-
-    sents = kg.split_sentences(kg.extract_text(pages_en)).persist()
-    modular_assembled = kg.assemble_triples(
-        kg.detect_mentions(sents, cw),
-        kg.extract_qualifiers(sents, amb_data["modifier_config"]),
-        qualifier_kinds=("year", "amount"),
-    )
-    ctx_frame = sents.select(
-        "url", "sent_idx",
-        hashing_trick_embed(F.col("tokens"), kg.CTX_DIM).alias("ctx"),
-    )
-    modular_t = kg.link_and_emit(
-        modular_assembled, cw, canon, entity_embeddings=ee, ctx=ctx_frame
-    )
-    cols = ["subj_id", "pred_id", "obj_id", "url",
-            "qualifier_year", "qualifier_amount"]
-    a = {tuple(r) for r in fused_t.select(cols).collect()}
-    b = {tuple(r) for r in modular_t.select(cols).collect()}
-    sents.unpersist()
-    assert len(a) > 0 and a == b
-
-
-def test_fused_election_equals_staged_disambiguation(spark, amb_data):
-    """extract_and_assemble(entity_candidates=...) — the in-kernel election
-    where ctx never crosses Arrow — emits triples identical to the staged
-    path (ctx column -> embedding_disambiguate_dual_pandas)."""
-    cw = _amb_cw(amb_data)
-    canon = kg.canonicalize_concepts(cw)
-    ee = amb_data["entity_embeddings"]
-    pages_en = amb_data["pages"].where(F.col("lang") == "en")
-    staged_t = kg.link_and_emit(
-        kg.extract_and_assemble(
-            pages_en, cw, amb_data["modifier_config"], ctx_dim=kg.CTX_DIM
-        ),
-        cw, canon, entity_embeddings=ee,
-    )
-    cand = kg.entity_candidate_frame(cw, canon, ee)
     fused_asm = kg.extract_and_assemble(
-        pages_en, cw, amb_data["modifier_config"],
-        ctx_dim=kg.CTX_DIM, entity_candidates=cand,
+        pages_en, cw, amb_data["modifier_config"], entity_candidates=cand
+    )
+    sents = kg.split_sentences(kg.extract_text(pages_en)).persist()
+    modular_asm = kg.elect_entities(
+        kg.assemble_triples(
+            kg.detect_mentions(sents, cw),
+            kg.extract_qualifiers(sents, amb_data["modifier_config"]),
+            qualifier_kinds=("year", "amount"),
+        ),
+        sents,
+        cand,
     )
     assert "ctx" not in fused_asm.columns
-    fused_t = kg.link_and_emit(fused_asm, cw, canon)
+    assert "ctx" not in modular_asm.columns
     cols = ["subj_id", "pred_id", "obj_id", "url",
             "qualifier_year", "qualifier_amount"]
-    a = {tuple(r) for r in staged_t.select(cols).collect()}
-    b = {tuple(r) for r in fused_t.select(cols).collect()}
+    a = {tuple(r) for r in kg.link_and_emit(fused_asm, cw, canon)
+         .select(cols).collect()}
+    b = {tuple(r) for r in kg.link_and_emit(modular_asm, cw, canon)
+         .select(cols).collect()}
+    sents.unpersist()
     assert len(a) > 0 and a == b
 
 
@@ -655,16 +641,19 @@ def test_runner_disambiguate_end_to_end(spark, tmp_path):
 
 def test_runner_modular_disambiguate_end_to_end(spark, tmp_path, monkeypatch):
     """The stage DAG on the salted modular path (a vocabulary past
-    MAX_BROADCAST_VOCAB) with disambiguate=True: the context embedding is
-    its own ``sentence_ctx`` stage, declared upstream of ``triples``, and
-    the triples pass the same P/R check as the fused path."""
+    MAX_BROADCAST_VOCAB) with disambiguate=True: the ``assembled`` stage
+    elects the entities (no ``sentence_ctx`` stage; ``triples`` reads only
+    assembled, crosswalk and canon_map), and the triples pass the same P/R
+    check as the fused path."""
     n = 200
     monkeypatch.setattr(kg, "MAX_BROADCAST_VOCAB", 0)
     with _stage_spans() as spans:
         outs = run_pipeline(spark, str(tmp_path / "amb_mod"), n_pages=n,
                             disambiguate=True)
     _assert_upstream_ended_first(spans)
-    assert "sentence_ctx" in spans["triples"][0]
+    assert "sentence_ctx" not in spans
+    assert spans["triples"][0] == ["assembled", "crosswalk", "canon_map"]
+    assert {"subj_id", "obj_id"} <= set(outs["assembled"].columns)
     got = _emitted(outs)
     gold = generate(spark, n, with_ambiguity=True)["golden_triples"].select(
         "subj_id", "pred_id", "obj_id"

@@ -76,20 +76,45 @@ def test_p1_path_prefix_pushdown(spark):
     assert "StringStartsWith" in plan or "StartsWith" in plan
 
 
+def _kg_disambiguating_triples(spark):
+    """The pages->triples pipeline with the entity election in the fused
+    assembly kernel (planted-ambiguity datagen)."""
+    from pyspark.sql import functions as F
+
+    from i2o_transform_spark.datagen import generate
+    from i2o_transform_spark.plans import kg
+
+    d = generate(spark, 1000, with_ambiguity=True)
+    cw = kg.compile_crosswalk(d["surface_vocab"], d["concept"], d["concept_rel"])
+    cm = kg.canonicalize_concepts(cw)
+    asm = kg.extract_and_assemble(
+        d["pages"].where(F.col("lang") == "en"), cw, d["modifier_config"],
+        entity_candidates=kg.entity_candidate_frame(
+            cw, cm, d["entity_embeddings"]
+        ),
+    )
+    return kg.link_and_emit(asm, cw, cm)
+
+
 def test_kg_pipeline_single_shuffle(spark):
-    """The flagship pages->triples pipeline: ONE fused MapInPandas stage, at
-    most one shuffle on the data path (the triple-dedup HashAggregate), no
-    sort-based aggregation, no cartesian product."""
-    plan = plan_of(QUERIES["kg_pipeline_triples"](spark, SF_DIR))
-    # data-path spine = everything before the broadcast build sides
-    spine = plan.split("BroadcastExchange")[0]
-    # one fused Arrow stage: exactly one MapInPandas NODE (each node prints
-    # twice in formatted mode — tree line + '(N) Node' detail header)
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
-    assert shuffle_count(spine) <= 1
-    assert "HashAggregate" in plan
-    assert "SortAggregate" not in spine
-    assert "CartesianProduct" not in plan
+    """The flagship pages->triples pipeline, plain and with the in-kernel
+    entity election: ONE fused MapInPandas stage, at most one shuffle on
+    the data path (the triple-dedup HashAggregate), no sort-based
+    aggregation, no cartesian product."""
+    for df in (
+        QUERIES["kg_pipeline_triples"](spark, SF_DIR),
+        _kg_disambiguating_triples(spark),
+    ):
+        plan = plan_of(df)
+        # data-path spine = everything before the broadcast build sides
+        spine = plan.split("BroadcastExchange")[0]
+        # one fused Arrow stage: exactly one MapInPandas NODE (each node
+        # prints twice in formatted mode — tree line + '(N) Node' header)
+        assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+        assert shuffle_count(spine) <= 1
+        assert "HashAggregate" in plan
+        assert "SortAggregate" not in spine
+        assert "CartesianProduct" not in plan
 
 
 def test_interval_merge_single_shuffle(spark):

@@ -287,9 +287,9 @@ def test_kg_stream_disambiguation_equals_batch(spark, tmp_path):
     expected = kg.link_and_emit(
         kg.extract_and_assemble(
             batch_pages.where(F.col("lang") == "en"), cw, d["modifier_config"],
-            ctx_dim=kg.CTX_DIM,
+            entity_candidates=kg.entity_candidate_frame(cw, cm, ee),
         ),
-        cw, cm, entity_embeddings=ee,
+        cw, cm,
     )
 
     stream = (
