@@ -581,11 +581,8 @@ def test_ctx_embedding_bitequal_across_paths(spark, amb_data):
     flat = np.concatenate([np.asarray(t, dtype=object) for t in toks])
     row_ids = np.repeat(np.arange(len(rows)), [len(t) for t in toks])
     numpy_ctx = hashing_trick_embed_np(flat, row_ids, len(rows), kg.CTX_DIM)
-    jvm = {(r.url, r.sent_idx): tuple(r.ctx) for r in rows}
-    fused = {
-        (r.url, r.sent_idx): tuple(v) for r, v in zip(rows, numpy_ctx.tolist())
-    }
-    assert fused == jvm
+    # one row per (url, sent_idx)
+    assert numpy_ctx.tolist() == [list(r.ctx) for r in rows]
 
 
 def test_disambiguation_modular_equals_fused(spark, amb_data):
@@ -622,6 +619,21 @@ def test_disambiguation_modular_equals_fused(spark, amb_data):
          .select(cols).collect()}
     sents.unpersist()
     assert len(a) > 0 and a == b
+
+
+def test_candidate_width_must_match_ctx_dim(spark, amb_data):
+    """Candidate embeddings of another width than the sentence context
+    (CTX_DIM) are rejected on the driver, before any task runs."""
+    cw = _amb_cw(amb_data)
+    cand = spark.createDataFrame(
+        [("acme corp", 1, [1.0, 0.0, 0.0])],
+        "surface_form string, entity_id long, emb array<double>",
+    )
+    with pytest.raises(ValueError, match="CTX_DIM=64 wide"):
+        kg.extract_and_assemble(
+            amb_data["pages"], cw, amb_data["modifier_config"],
+            entity_candidates=cand,
+        )
 
 
 def test_runner_disambiguate_end_to_end(spark, tmp_path):
