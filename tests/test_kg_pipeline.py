@@ -621,6 +621,35 @@ def test_disambiguation_modular_equals_fused(spark, amb_data):
     assert len(a) > 0 and a == b
 
 
+def test_fused_election_equals_staged_disambiguation(spark, amb_data):
+    """On one and the same assembly (extract_and_assemble without
+    candidates), the in-kernel election (entity_candidates=..., where ctx
+    never crosses Arrow) and the staged election (elect_entities: JVM ctx
+    column -> embedding_disambiguate_dual_pandas) emit identical triples."""
+    cw = _amb_cw(amb_data)
+    canon = kg.canonicalize_concepts(cw)
+    cand = kg.entity_candidate_frame(cw, canon, amb_data["entity_embeddings"])
+    pages_en = amb_data["pages"].where(F.col("lang") == "en")
+    plain_asm = kg.extract_and_assemble(
+        pages_en, cw, amb_data["modifier_config"]
+    )
+    assert "subj_id" not in plain_asm.columns
+    sents = kg.split_sentences(kg.extract_text(pages_en)).persist()
+    staged_asm = kg.elect_entities(plain_asm, sents, cand)
+    fused_asm = kg.extract_and_assemble(
+        pages_en, cw, amb_data["modifier_config"], entity_candidates=cand
+    )
+    assert "ctx" not in fused_asm.columns
+    cols = ["subj_id", "pred_id", "obj_id", "url",
+            "qualifier_year", "qualifier_amount"]
+    a = {tuple(r) for r in kg.link_and_emit(staged_asm, cw, canon)
+         .select(cols).collect()}
+    b = {tuple(r) for r in kg.link_and_emit(fused_asm, cw, canon)
+         .select(cols).collect()}
+    sents.unpersist()
+    assert len(a) > 0 and a == b
+
+
 def test_candidate_width_must_match_ctx_dim(spark, amb_data):
     """Candidate embeddings of another width than the sentence context
     (CTX_DIM) are rejected on the driver, before any task runs."""
